@@ -1737,6 +1737,104 @@ def wrap_truthy_filters(sql: str) -> str:
     return unmask_literals(masked, lits)
 
 
+_DIV_WORD = re.compile(r"\bDIV\b", re.IGNORECASE)
+# a name, number, masked literal/identifier or dotted mix of them
+_DIV_NAME = r"(?:\x00\d+\x00|[\w.])+"
+_DIV_NOT_OPERAND = frozenset((
+    "SELECT", "FROM", "WHERE", "AND", "OR", "NOT", "ON", "BY", "CASE",
+    "WHEN", "THEN", "ELSE", "END", "INTERVAL", "HAVING", "AS", "IN", "IS"))
+_INTEGRAL_CAST = re.compile(
+    r"\sAS\s+(?:BIGINT|INT|INTEGER|SMALLINT|TINYINT|LONG)\s*\)$",
+    re.IGNORECASE)
+
+
+def _integral_operand(x: str) -> bool:
+    """An integer literal, or one whole CAST to an integral type."""
+    if re.fullmatch(r"[+-]?\d+", x):
+        return True
+    m = re.match(r"(?:TRY_)?CAST\s*\(", x, re.IGNORECASE)
+    return bool(m and _find_close(x, m.end() - 1) == len(x) - 1
+                and _INTEGRAL_CAST.search(x))
+
+
+def _div_operand_start(sql: str, end: int) -> int:
+    """Start of the primary (name, literal, call or paren group) that ends
+    just before `end`, or -1."""
+    k = len(sql[:end].rstrip())
+    if k and sql[k - 1] == ")":
+        depth = 0
+        for i in range(k - 1, -1, -1):
+            depth += {")": 1, "(": -1}.get(sql[i], 0)
+            if depth == 0:
+                m = re.search(_DIV_NAME + "$", sql[:i])  # function name
+                named = m and m.group(0).upper() not in _DIV_NOT_OPERAND
+                return m.start() if named else i
+        return -1
+    m = re.search(_DIV_NAME + "$", sql[:k])
+    if not m or m.group(0).upper() in _DIV_NOT_OPERAND:
+        return -1
+    return m.start()
+
+
+def _div_left(sql: str, end: int) -> int:
+    """Start of DIV's left operand: MySQL's * / % DIV MOD share one
+    left-associative level, so it extends left across them (and a unary
+    sign) up to a lower-precedence token."""
+    start = _div_operand_start(sql, end)
+    while start > 0:
+        before = sql[:start].rstrip()
+        m = re.search(r"(?:[*/%]|\b(?:DIV|MOD))$", before, re.IGNORECASE)
+        if m:
+            start = _div_operand_start(sql, m.start())
+            continue
+        if before.endswith(("-", "+")) and _UNARY_PREV.search(before[:-1]):
+            start = len(before) - 1
+            continue
+        break
+    return start
+
+
+def _div_right(sql: str, start: int) -> int:
+    """End of DIV's right operand, a unary-signed primary, or -1."""
+    k = re.compile(r"[\s+-]*").match(sql, start).end()
+    if sql[k:k + 1] == "(":
+        return _find_close(sql, k) + 1
+    m = re.compile(_DIV_NAME).match(sql, k)
+    if not m or m.group(0).upper() in _DIV_NOT_OPERAND:
+        return -1
+    call = re.compile(r"\s*\(").match(sql, m.end())
+    return _find_close(sql, call.end() - 1) + 1 if call else m.end()
+
+
+def _rewrite_div(sql: str) -> str:
+    """x DIV y: MySQL converts a non-integer operand to DECIMAL and
+    truncates the quotient toward zero; Spark's `div` accepts integral
+    and DECIMAL operands but rejects DOUBLE (BINARY_OP_DIFF_TYPES). Cast
+    every operand not provably integral to DECIMAL(38,10) — exact for any
+    BIGINT and for a DOUBLE's shortest decimal form."""
+    pos = 0
+    while True:
+        m = _DIV_WORD.search(sql, pos)
+        if not m:
+            return sql
+        try:
+            start, end = _div_left(sql, m.start()), _div_right(sql, m.end())
+        except ValueError:  # unbalanced parens: leave it to Spark
+            start = end = -1
+        if start < 0 or end < 0:
+            pos = m.end()
+            continue
+        left = sql[start:m.start()].strip()
+        right = sql[m.end():end].strip()
+        cast = [x if _integral_operand(x)
+                else f"CAST({x} AS DECIMAL(38,10))" for x in (left, right)]
+        # `WHERE(a) DIV 2`: keep the keyword apart from the new CAST
+        sep = " " if sql[start - 1:start].isalnum() else ""
+        repl = f"{sep}{cast[0]} DIV {cast[1]}"
+        sql = sql[:start] + repl + sql[end:]
+        pos = start + len(repl) - len(cast[1])
+
+
 def transpile_select(sql: str) -> str:
     """MySQL SELECT → Spark SQL SELECT. All rewrites run on literal-masked
     text so quoted strings and backtick identifiers pass through verbatim."""
@@ -1925,6 +2023,7 @@ def transpile_select(sql: str) -> str:
         sql = _pipes_concat_rewrite(sql)
     sql = re.sub(r"&&", " AND ", sql)
     sql = re.sub(r"!(?!=)", " NOT ", sql)
+    sql = _rewrite_div(sql)
     # Bit shifts are 64-bit in MySQL; Spark's << / >> type from the left
     # operand, so an INT literal shifted by >=32 silently wraps. Casting
     # the left atom (number, column, placeholder, or one paren group) to

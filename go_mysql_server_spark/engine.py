@@ -25,7 +25,7 @@ import re
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, Row, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -55,6 +55,21 @@ class OkResult:
     rows_affected: int = 0
     last_insert_id: int | None = None
     info: str = ""
+
+
+@dataclass
+class BatchCheck:
+    """What one pass over a DML batch found (Engine._check_batch)."""
+
+    n: int                    # rows in the batch
+    violated: list[str]       # messages of the broken checks, in check order
+    dup: int = 0              # rows whose key repeats an earlier row's key
+    # every row's key, when the batch was collected into Python
+    keys: list[tuple] | None = None
+
+    def raise_violation(self) -> None:
+        if self.violated:
+            raise SqlError(self.violated[0])
 
 
 @dataclass
@@ -112,11 +127,13 @@ class TableState:
     stats: dict = field(default_factory=dict)            # ANALYZE output
     histograms: dict = field(default_factory=dict)       # col → bucket bounds
     # version history for AS OF time travel (reference GetTableInsensitiveAsOf,
-    # sql/databases.go:212-218; myhistorytable fixture): snapshots appended
-    # per committing DML statement, with wall-clock commit times for
+    # sql/databases.go:212-218; myhistorytable fixture): one snapshot per
+    # committed statement or transaction, with wall-clock commit times for
     # timestamp-based AS OF.
     history: list[DataFrame] = field(default_factory=list)
     history_ts: list[float] = field(default_factory=list)
+    # bumped on every change to `df`, committed or not (fulltext staleness)
+    changes: int = 0
     # FULLTEXT indexes: postings DataFrames maintained through the DML
     # path (reference sql/fulltext/fulltext.go, multi_editor.go)
     fulltext: list = field(default_factory=list)  # [FulltextIndex]
@@ -156,6 +173,14 @@ _UINT_RANGES = {
     "mediumint": (0, 16777215), "int": (0, 4294967295),
     "integer": (0, 4294967295), "bigint": (0, (1 << 64) - 1),
 }
+
+
+def _int_range_within(src_type: str | None, bounds: tuple[int, int]) -> bool:
+    """True when every value of the Spark integral type `src_type` lies
+    within `bounds`: a range check on such a value can never fail."""
+    src = _INT_RANGES.get(src_type or "")
+    return src is not None and bounds[0] <= src[0] and src[1] <= bounds[1]
+
 
 _TYPE_MAP: list[tuple[re.Pattern, Any]] = [
     (re.compile(r"^BIGINT\s+UNSIGNED", re.I), "uint_bigint"),
@@ -662,6 +687,11 @@ class Engine:
         # (reentrant: event bodies run eng.query on the scheduler thread)
         self._stmt_lock = threading.RLock()
         self._event_scheduler = None
+        # open BEGIN ... COMMIT: the state to roll back to, the named
+        # savepoints, and the tables changed since BEGIN (id → TableState)
+        self._txn_snapshot: dict | None = None
+        self._savepoints: dict[str, dict] = {}
+        self._txn_changed: dict[int, TableState] = {}
 
     # ---- public API --------------------------------------------------------
 
@@ -707,32 +737,34 @@ class Engine:
         postings = build_postings(ts.df, key, cols).localCheckpoint(
             eager=True)
         fx = FulltextIndex(idx_name, tuple(cols), key, postings,
-                           base_version=len(ts.history))
+                           base_version=ts.changes)
         ts.fulltext = [f for f in ts.fulltext if f.name != idx_name] + [fx]
 
     def _ft_after_insert(self, ts: TableState, incoming: DataFrame,
                          incremental: bool) -> None:
         """DML write-path hook (reference multi_editor.go): plain INSERT /
-        REPLACE maintain the postings from the delta alone; ODKU folds
+        REPLACE maintain the postings from the delta alone, provided the
+        postings reflected the table just before this insert; ODKU folds
         rows into updates whose delta isn't threaded through, so those
         mark the index for lazy rebuild at the next MATCH."""
         for fx in ts.fulltext:
-            if incremental:
+            if (incremental and not fx.pending_rebuild
+                    and fx.base_version == ts.changes - 1):
                 fx.apply_insert(incoming)
-                fx.base_version = len(ts.history)
+                fx.base_version = ts.changes
             else:
                 fx.pending_rebuild = True
 
     def _ft_sync(self, ts: TableState) -> None:
         """Bring every fulltext index up to date with the table snapshot
         and (re)bind its temp view. UPDATE/DELETE/ALTER don't thread
-        deltas, so staleness is detected by snapshot version and repaired
-        with a rebuild — correct always, incremental where the write path
-        provided the delta."""
+        deltas, so staleness is detected by the table's change counter
+        and repaired with a rebuild — correct always, incremental where
+        the write path provided the delta."""
         for fx in ts.fulltext:
-            if fx.pending_rebuild or fx.base_version != len(ts.history):
+            if fx.pending_rebuild or fx.base_version != ts.changes:
                 fx.rebuild(ts.df)
-                fx.base_version = len(ts.history)
+                fx.base_version = ts.changes
             fx.checkpoint_if_due()
             fx.view = f"__ft_{ts.name}_{fx.name}"
             fx.postings.createOrReplaceTempView(fx.view)
@@ -1197,15 +1229,25 @@ class Engine:
             return db.strip("`"), tbl.strip("`")
         return None, name
 
-    def _register(self, ts: TableState, record_version: bool = True) -> None:
+    def _register(self, ts: TableState) -> None:
         """(Re)bind the table's current snapshot as a temp view and record
-        the snapshot in the version history (AS OF support — snapshots are
-        already immutable DataFrames, so 'history' costs one list append)."""
+        it in the version history: one snapshot per committed statement or
+        transaction (AS OF support, commit ordinals as in the reference's
+        Dolt binding). Inside BEGIN ... COMMIT the table is only marked
+        changed; COMMIT records its final snapshot once."""
         assert ts.df is not None
         ts.df.createOrReplaceTempView(ts.name)
-        if record_version:
-            ts.history.append(ts.df)
-            ts.history_ts.append(__import__("time").time())
+        ts.changes += 1
+        if self._txn_snapshot is not None:
+            self._txn_changed[id(ts)] = ts
+        else:
+            self._record_version(ts)
+
+    @staticmethod
+    def _record_version(ts: TableState) -> None:
+        # snapshots are immutable DataFrames: a version is one list append
+        ts.history.append(ts.df)
+        ts.history_ts.append(__import__("time").time())
 
     def _empty_df(self, ts: TableState) -> DataFrame:
         return self.spark.createDataFrame([], ts.schema)
@@ -3772,12 +3814,16 @@ class Engine:
                 f"column count mismatch: {len(new_rows.columns)} values for "
                 f"{len(target_cols)} columns")
         named = new_rows.toDF(*target_cols)
+        src_types = dict(named.dtypes)
 
-        # fill defaults / auto-increment for omitted columns
-        n_new = named.count()
         last_id = None
         # INSERT IGNORE and non-strict sql_mode use lenient value conversion
         lenient = ignore or not self._strict_mode()
+        # IGNORE reports against the rows it was given, before its
+        # CHECK/FK/unique filters drop any
+        n_given = self._check_batch(named, []).n if ignore else None
+        number_omitted_auto_inc = False
+        # fill defaults / auto-increment for omitted columns
         select_cols = []
         deferred_defaults: list = []  # defaults referencing other columns
         for c in ts.columns:
@@ -3787,20 +3833,20 @@ class Engine:
                 select_cols.append(F.lit(None).cast(c.spark_type).alias(c.name))
             elif c.name in target_cols:
                 src = F.col(c.name)
-                if c.is_year and dict(named.dtypes).get(c.name) == "string":
+                if c.is_year and src_types.get(c.name) == "string":
                     # YEAR: the STRINGS '0'/'00' mean 2000, while the
                     # NUMBER 0 means 0000 (reference sql/types/year.go) —
                     # resolve before the int cast erases the distinction
                     src = (F.when(src.rlike("^00?$"), F.lit(2000))
                            .otherwise(src.cast("int")))
                 if (c.spark_type.simpleString() == "string"
-                        and dict(named.dtypes).get(c.name) == "boolean"):
+                        and src_types.get(c.name) == "boolean"):
                     # MySQL TRUE/FALSE are 1/0 — a boolean literal stored
                     # into a string column renders '1'/'0', not 'true'
                     src = (F.when(src.isNull(), F.lit(None).cast("string"))
                            .when(src, "1").otherwise("0"))
                 if (c.spark_type.simpleString() == "string"
-                        and dict(named.dtypes).get(c.name) == "binary"):
+                        and src_types.get(c.name) == "binary"):
                     # binary → utf8mb4 column: strict mode rejects invalid
                     # byte sequences; non-strict keeps the longest valid
                     # prefix (reference sql/types/strings.go charset
@@ -3876,7 +3922,7 @@ class Engine:
                     .cast(c.spark_type).alias(c.name)
                 )
                 last_id = ts.auto_inc_next
-                ts.auto_inc_next += n_new
+                number_omitted_auto_inc = True  # counter moves by the count
             elif c.default is not None:
                 if _default_references(
                         c, {cc.name.lower() for cc in ts.columns}):
@@ -3901,15 +3947,30 @@ class Engine:
                 select_cols.append(F.lit("").alias(c.name))
             else:
                 select_cols.append(F.lit(None).cast(c.spark_type).alias(c.name))
-        # Strict-mode out-of-range check on PRE-cast values (a wrapped cast
-        # would otherwise hide the violation; reference sql/types/number.go
-        # Convert errors instead of wrapping). INSERT IGNORE and non-strict
-        # sql_mode clamp via _lenient_cast instead of erroring.
-        if not lenient:
-            self._check_int_bounds(
-                ts, named, {c.name: F.col(c.name) for c in ts.columns
-                            if c.name in target_cols})
-        incoming = named.select(*select_cols)
+        # Strict-mode out-of-range check on PRE-cast values (reference
+        # sql/types/number.go Convert errors instead of wrapping; INSERT
+        # IGNORE and non-strict sql_mode clamp via _lenient_cast instead).
+        # The pre-cast values ride along as hidden columns into the one
+        # check pass below — unless a BEFORE trigger (which may rebuild the
+        # rows) or a UNIQUE index check could raise first: then they are
+        # checked up front, keeping range errors first.
+        bounded = [] if lenient else [
+            c.name for c in ts.columns
+            if c.int_bounds is not None and c.name in target_cols
+            and not _int_range_within(src_types[c.name], c.int_bounds)]
+        if bounded and (
+                any(ix.unique for ix in ts.indexes)
+                or any(t.event == "INSERT" and t.timing == "BEFORE"
+                       for t in self.triggers.get(ts.name, []))):
+            self._check_batch(named, self._range_checks(
+                ts, {b: F.col(b) for b in bounded})).raise_violation()
+            bounded = []
+        hidden = [f"__pre_{b}" for b in bounded]
+        range_checks = self._range_checks(
+            ts, {b: F.col(h) for b, h in zip(bounded, hidden)})
+        incoming = named.select(
+            *select_cols,
+            *[F.col(b).alias(h) for b, h in zip(bounded, hidden)])
         # cross-column defaults evaluate in TABLE ORDER over the assembled
         # row, so a default can read a provided column anywhere in the row
         # and the result of any default evaluated before it
@@ -3974,8 +4035,22 @@ class Engine:
         self._replace_batch_dropped = 0
         incoming, uq_victims = self._enforce_unique_indexes(
             ts, incoming, ignore, verb, odku=odku is not None)
-        self._validate(ts, incoming, lenient=lenient,
-                       skip_raises=ignore)
+        # ONE pass for the row count, every row-level check and the
+        # within-batch duplicate keys (IGNORE already filtered violating
+        # rows, so it only counts); errors keep their precedence: range,
+        # then NOT NULL/ENUM/SET/CHECK, then FK, then duplicate keys
+        pk = list(ts.primary_key)
+        chk = self._check_batch(
+            incoming,
+            range_checks + ([] if ignore else self._row_checks(ts, lenient)),
+            pk)
+        incoming = incoming.drop(*hidden)
+        n_new = n_given if ignore else chk.n
+        if number_omitted_auto_inc:
+            ts.auto_inc_next += n_new
+        chk.raise_violation()
+        if not ignore:
+            self._check_foreign_keys(ts, incoming)
 
         existing = ts.df
         n_deleted_uq = 0
@@ -3990,49 +4065,37 @@ class Engine:
             # separately — n_clash is computed against the pruned df)
             n_deleted_uq = n_before - existing.count()
         n_clash = 0
-        if ts.primary_key:
-            pk = list(ts.primary_key)
-            # ONE aggregation job for both PK checks (was two): duplicate
-            # keys WITHIN the incoming batch (count > countDistinct) and
-            # incoming rows clashing with existing keys (left join marker).
-            stats = (
-                incoming.select(*pk)
-                .join(existing.select(*pk).withColumn("__ex", F.lit(1)),
-                      pk, "left")
-                .agg((F.count(F.lit(1))
-                      - F.count_distinct(*[F.col(c) for c in pk]))
-                     .alias("dup_rows"),
-                     F.count("__ex").alias("n_clash"))
-                .first()
-            )
-            if stats["dup_rows"] and not ignore and verb != "REPLACE":
+        if pk and chk.n:
+            if chk.dup and not ignore and verb != "REPLACE":
                 raise SqlError("duplicate primary key within inserted rows")
-            if stats["dup_rows"] and ignore and verb != "REPLACE":
+            # incoming rows clashing with existing keys; the probe's
+            # clash set also serves IGNORE, REPLACE and ODKU below
+            n_clash, drop_clashing = self._probe_clashes(
+                existing, incoming, pk, chk)
+            if chk.dup and ignore and verb != "REPLACE":
                 # IGNORE keeps the FIRST row per duplicated key
                 wpk = Window.partitionBy(*pk).orderBy(
                     F.monotonically_increasing_id())
                 incoming = (incoming.withColumn(
                     "__pk_rn", F.row_number().over(wpk))
                     .filter(F.col("__pk_rn") == 1).drop("__pk_rn"))
-            if stats["dup_rows"] and verb == "REPLACE":
+            if chk.dup and verb == "REPLACE":
                 # sequential REPLACE: the LAST row per duplicated pk
                 # wins; earlier ones were inserted-then-deleted
-                self._replace_batch_dropped += int(stats["dup_rows"])
+                self._replace_batch_dropped += chk.dup
                 wpk = Window.partitionBy(*pk).orderBy(
                     F.monotonically_increasing_id().desc())
                 incoming = (incoming.withColumn(
                     "__pk_rn", F.row_number().over(wpk))
                     .filter(F.col("__pk_rn") == 1).drop("__pk_rn"))
-            n_clash = int(stats["n_clash"])
             if n_clash:
                 if verb == "REPLACE":
-                    existing = existing.join(incoming.select(*pk), pk, "left_anti")
+                    existing = drop_clashing(existing)
                 elif odku is not None:
-                    # clash detection keys are the PRE-update existing
-                    # keys: the ODKU assignment may rewrite the pk itself
+                    # the clash set holds the PRE-update existing keys:
+                    # the ODKU assignment may rewrite the pk itself
                     # (a.i = b.j + 100), and the folded incoming rows must
                     # still be excluded from the append
-                    pre_keys = existing.select(*pk)
                     existing = self._apply_odku(ts, existing, incoming, odku,
                                                 src_cols=src_cols,
                                                 target_cols=target_cols,
@@ -4042,9 +4105,9 @@ class Engine:
                         # update mutates their inputs (reference
                         # issue: virtual col stays consistent)
                         existing = self._compute_generated(ts, existing)
-                    incoming = incoming.join(pre_keys, pk, "left_anti")
+                    incoming = drop_clashing(incoming)
                 elif ignore:
-                    incoming = incoming.join(existing.select(*pk), pk, "left_anti")
+                    incoming = drop_clashing(incoming)
                 else:
                     raise SqlError("duplicate entry for primary key")
         if odku is not None:
@@ -4312,15 +4375,92 @@ class Engine:
     def _empty_df_for(self, schema) -> DataFrame:
         return self.spark.createDataFrame([], schema)
 
-    def _validate(self, ts: TableState, df: DataFrame,
-                  lenient: bool = False,
-                  skip_raises: bool = False) -> None:
-        # Single aggregation pass over ALL column/check constraints (r1
-        # judge finding: one .count() job per constraint made a wide table
-        # pay 10+ Spark jobs per INSERT). FK checks below are joins and
-        # stay per-FK.
-        checks: list[tuple[F.Column, str]] = []
+    def _check_batch(self, df: DataFrame, checks: list[tuple[Column, str]],
+                     key: list[str] | tuple = ()) -> BatchCheck:
+        """Row count, broken checks and within-batch duplicate keys of a
+        DML batch in ONE pass (one Spark pass per statement, not one per
+        constraint). A batch whose optimized plan is a LocalRelation
+        (literal INSERT ... VALUES) is projected to per-row flags and
+        collected into Python with no Spark job, and its keys come back
+        for the clash probe; any other batch is one fused aggregate, or a
+        one-job row count when neither checks nor a key are asked for.
+        `checks` are (violation predicate, message) pairs; a NULL
+        predicate passes, as MySQL's CHECK does."""
+        key = list(key)
+        flags = [F.coalesce(pred, F.lit(False)) for pred, _ in checks]
+        plan = df._jdf.queryExecution().optimizedPlan()
+        if plan.getClass().getSimpleName() == "LocalRelation":
+            rows = df.select(
+                F.lit(1).alias("__one"),
+                *[f.alias(f"__v{i}") for i, f in enumerate(flags)],
+                *key).collect()
+            violated = [msg for i, (_, msg) in enumerate(checks)
+                        if any(r[1 + i] for r in rows)]
+            if not key:
+                return BatchCheck(len(rows), violated)
+            keys = [tuple(r[1 + len(flags):]) for r in rows]
+            distinct = {k for k in keys if None not in k}
+            return BatchCheck(len(rows), violated,
+                              len(rows) - len(distinct), keys)
+        if not checks and not key:
+            # a bare count needs no aggregate exchange: one job over the
+            # plan's own partitions (DataFrame.count() launches two)
+            return BatchCheck(df._jdf.queryExecution().toRdd().count(), [])
+        aggs = [F.count(F.lit(1))] + [F.max(f) for f in flags]
+        if key:
+            aggs.append(F.count_distinct(*[F.col(c) for c in key]))
+        row = df.agg(*aggs).first()
+        violated = [msg for i, (_, msg) in enumerate(checks) if row[1 + i]]
+        return BatchCheck(row[0], violated, row[0] - row[-1] if key else 0)
+
+    def _probe_clashes(self, existing: DataFrame, incoming: DataFrame,
+                       key: list[str], chk: BatchCheck):
+        """Incoming rows whose key is already taken. Returns (their
+        count, a function that drops rows with a clashing key from a
+        frame) — REPLACE applies it to the existing rows, IGNORE and
+        ODKU to the incoming ones. A collected batch probes with one
+        IN-list filter job that returns the clashing keys; any other
+        batch with a semi-join."""
+        if chk.keys is not None:
+            batch = {k for k in chk.keys if None not in k}
+            hits = (existing.filter(self._key_in(existing, key, batch))
+                    .select(*key).collect() if batch else [])
+            clash = {tuple(r) for r in hits}
+            n = sum(k in clash for k in chk.keys)
+            return n, lambda df: df.filter(
+                ~self._key_in(existing, key, clash))
+        clash_keys = incoming.select(*key).join(
+            existing.select(*key), key, "left_semi")
+        return self._check_batch(clash_keys, []).n, lambda df: df.join(
+            clash_keys, key, "left_anti")
+
+    @staticmethod
+    def _key_in(df: DataFrame, key: list[str], keys) -> Column:
+        """`key IN (keys)` over collected key tuples, literals typed as
+        `df`'s key columns."""
+        if len(key) == 1:
+            return F.col(key[0]).isin([k[0] for k in keys])
+        types = {f.name: f.dataType for f in df.schema.fields}
+        return F.struct(*key).isin([
+            F.struct(*[F.lit(v).cast(types[c]).alias(c)
+                       for c, v in zip(key, k)]) for k in keys])
+
+    def _row_checks(self, ts: TableState, lenient: bool = False,
+                    changed: set[str] | None = None
+                    ) -> list[tuple[Column, str]]:
+        """NOT NULL, ENUM/SET membership and enforced CHECK constraints
+        as (violation predicate, message) pairs for _check_batch. With
+        `changed` (the columns an UPDATE writes), only the checks those
+        columns can break: the row's other values already satisfy theirs."""
+        def touches(text: str) -> bool:
+            return changed is None or any(
+                re.search(rf"(?<!\w){re.escape(col)}(?!\w)", text, re.I)
+                for col in changed)
+
+        checks: list[tuple[Column, str]] = []
         for c in ts.columns:
+            if changed is not None and c.name not in changed:
+                continue
             if not c.nullable:
                 checks.append((F.col(c.name).isNull(),
                                f"column {c.name!r} cannot be null"))
@@ -4338,21 +4478,15 @@ class Engine:
                         f"x -> x != '' AND x NOT IN ({members}))) > 0"),
                     f"invalid SET value for column {c.name!r}"))
         for ci, chk in enumerate(ts.checks):
-            if not ts.check_enforced_at(ci):
+            if not ts.check_enforced_at(ci) or not touches(chk):
                 continue  # NOT ENFORCED: metadata only
             # NULL check result passes (MySQL CHECK semantics)
             checks.append((F.expr(f"NOT ({chk})"),
                            f"CHECK constraint violated: {chk}"))
-        if checks and not skip_raises:
-            counts = df.agg(*[
-                F.sum(F.when(pred, 1).otherwise(0)).alias(f"_v{i}")
-                for i, (pred, _) in enumerate(checks)
-            ]).first()
-            for i, (_, msg) in enumerate(checks):
-                if counts[i]:
-                    raise SqlError(msg)
-        if skip_raises:
-            return  # IGNORE already filtered violating rows
+        return checks
+
+    def _check_foreign_keys(self, ts: TableState, df: DataFrame) -> None:
+        """Child-side FK check of a batch: one anti-join per FK."""
         for fk in ts.foreign_keys:
             parent = self._db(None).get(fk.parent_table)
             if parent is None or parent.df is None:
@@ -4435,7 +4569,7 @@ class Engine:
         the bitmask decode), string values match members
         case-insensitively and normalize to the declared case, SET
         strings dedupe and re-order to declaration order. Values that
-        resolve to no member pass through unchanged so _validate (or the
+        resolve to no member pass through unchanged so _row_checks (or the
         lenient '' rewrite) still sees them. One projection, JVM-side."""
         exprs = {}
         for c in ts.columns:
@@ -4573,11 +4707,12 @@ class Engine:
             expr = F.coalesce(expr, dflt)
         return expr
 
-    def _check_int_bounds(self, ts: TableState, df: DataFrame,
-                          exprs: dict[str, F.Column]) -> None:
-        """One aggregation pass asserting every bounded integer column's
-        pre-cast value is in its MySQL range (strict mode; reference
-        sql/types/number.go:40-94)."""
+    @staticmethod
+    def _range_checks(ts: TableState,
+                      exprs: dict[str, Column]) -> list[tuple[Column, str]]:
+        """Strict-mode range predicates on the PRE-cast value of every
+        bounded integer column in `exprs` (a wrapped cast would hide the
+        violation; reference sql/types/number.go:40-94)."""
         checks = []
         for c in ts.columns:
             if c.int_bounds is None or c.name not in exprs:
@@ -4589,15 +4724,7 @@ class Engine:
             checks.append((
                 v.isNotNull() & ((v < lo_l) | (v > hi_l)),
                 f"out of range value for column {c.name!r}"))
-        if not checks:
-            return
-        counts = df.agg(*[
-            F.sum(F.when(pred, 1).otherwise(0)).alias(f"_b{i}")
-            for i, (pred, _) in enumerate(checks)
-        ]).first()
-        for i, (_, msg) in enumerate(checks):
-            if counts[i]:
-                raise SqlError(msg)
+        return checks
 
     _DML_ORDER_LIMIT = re.compile(
         r"(?:\s+ORDER\s+BY\s+([^()]+?))?\s+LIMIT\s+(\d+)"
@@ -4752,20 +4879,34 @@ class Engine:
             raise SqlError(
                 f"the value specified for generated column "
                 f"{sorted(gen_assigned)} is not allowed")
-        ignore = bool(m.group(1)) or not self._strict_mode()
+        explicit_ignore = bool(m.group(1))
+        ignore = explicit_ignore or not self._strict_mode()
         matched = ts.df.filter(where)
-        n_match = matched.count()
-        # FOUND_ROWS() after an UPDATE reports the matched-row count
-        # (reference found_rows.go + update result Info.Matched)
-        self._found_rows_n = n_match
         if not assigns:
             # every assignment was a generated-column DEFAULT: nothing
             # changes, but the statement still reports matched rows
-            return OkResult(n_match)
-        if n_match and not ignore:
-            self._check_int_bounds(
-                ts, matched,
-                {c: F.expr(transpile_select(e)) for c, e in assigns.items()})
+            # (FOUND_ROWS() too: reference found_rows.go + update result
+            # Info.Matched)
+            self._found_rows_n = self._check_batch(matched, []).n
+            return OkResult(self._found_rows_n)
+        utrigs = [t for t in self.triggers.get(ts.name, [])
+                  if t.event == "UPDATE"]
+        # Strict-mode range check on the PRE-cast assigned values: they
+        # ride along as hidden columns into the one check pass over the
+        # matched rows, unless UPDATE triggers (which branch on the match
+        # count and may rebuild the rows) run first — then the count and
+        # the range check come up front
+        pre = {} if ignore else {
+            c.name: F.expr(transpile_select(assigns[c.name]))
+            for c in ts.columns
+            if c.int_bounds is not None and c.name in assigns}
+        n_match = None
+        if utrigs:
+            first = self._check_batch(matched, self._range_checks(ts, pre))
+            first.raise_violation()
+            n_match = first.n
+            pre = {}
+        hidden = {c: f"__pre_{c}" for c in pre}
 
         def _assigned(c):
             expr = F.expr(transpile_select(assigns[c.name]))
@@ -4782,8 +4923,6 @@ class Engine:
             if c.name in assigns else F.col(c.name)
             for c in ts.columns
         ]
-        utrigs = [t for t in self.triggers.get(ts.name, [])
-                  if t.event == "UPDATE"]
         seq_rows = (any(t.timing == "BEFORE"
                         and not self._update_before_vectorizable(t)
                         for t in utrigs)
@@ -4792,7 +4931,12 @@ class Engine:
                            for t in utrigs))
         old_carry = ([F.col(c.name).alias(f"__old__{c.name}")
                       for c in ts.columns] if seq_rows else [])
-        updated = base.select(*out_cols, "__matched", *old_carry)
+        updated = base.select(*out_cols, "__matched", *old_carry,
+                              *[pre[c].alias(h) for c, h in hidden.items()])
+        pre_types = dict(updated.dtypes) if hidden else {}
+        range_checks = self._range_checks(ts, {
+            c: F.col(h) for c, h in hidden.items()
+            if not _int_range_within(pre_types[h], by_name[c].int_bounds)})
         if any(c.enum_values is not None or c.set_values is not None
                or c.fsp is not None or c.is_year for c in ts.columns):
             updated = self._enum_set_normalize(ts, updated)
@@ -4845,12 +4989,27 @@ class Engine:
                 self._restore_state(snap)
             raise
         try:
-            explicit_ignore = bool(m.group(1))
-            if explicit_ignore and n_match:
-                updated = self._update_ignore_revert(ts, base, updated,
-                                                     assigns)
+            # ONE pass over the matched rows: their count, the range
+            # check and every row-level constraint (UPDATE IGNORE reverts
+            # violating rows instead, so it only counts)
+            new_rows = updated.filter("__matched")
+            # BEFORE triggers may write any column; otherwise the
+            # assigned and the generated ones change
+            changed = None if any(t.timing == "BEFORE" for t in utrigs) \
+                else set(assigns) | {c.name for c in ts.columns
+                                     if c.generated}
+            row_checks = ([] if explicit_ignore
+                          else self._row_checks(ts, changed=changed))
+            chk = self._check_batch(new_rows, range_checks + row_checks)
+            n_match = chk.n
+            self._found_rows_n = n_match
+            chk.raise_violation()
+            if explicit_ignore:
+                if n_match:
+                    updated = self._update_ignore_revert(ts, base, updated,
+                                                         assigns)
             else:
-                self._validate(ts, updated.filter("__matched"))
+                self._check_foreign_keys(ts, new_rows)
             fks = self._referencing_fks(ts, set(assigns))
             if fks and n_match:
                 needed = sorted({p for _, fk in fks
@@ -4864,7 +5023,8 @@ class Engine:
                       for p in needed],
                 )
                 self._apply_fk_on_update(ts, mapping, fks)
-            ts.df = updated.drop("__matched").localCheckpoint(eager=True)
+            ts.df = updated.drop("__matched", *hidden.values()) \
+                .localCheckpoint(eager=True)
             self._register(ts)
             if n_match:
                 if pairs_old is not None:
@@ -5325,8 +5485,14 @@ class Engine:
         if limit_n is not None:
             where = self._limit_victims_where(ts, where, order_sql,
                                               limit_n, offset_n)
-        deleted = ts.df.filter(where).localCheckpoint(eager=True)
-        n = deleted.count()
+        deleted = ts.df.filter(where)
+        if (any(t.event == "DELETE" for t in self.triggers.get(ts.name, []))
+                or any(fk.parent_table == ts.name
+                       for child in self._db(None).values()
+                       for fk in child.foreign_keys)):
+            # triggers and FK actions read the victims again: pin them
+            deleted = deleted.localCheckpoint(eager=True)
+        n = self._check_batch(deleted, []).n
         if n:
             self._run_old_triggers(ts, deleted, "DELETE", "BEFORE")
             self._apply_fk_on_delete(ts, deleted)
@@ -6162,7 +6328,8 @@ class Engine:
     def _snapshot_state(self) -> dict:
         import copy as _copy
         snap: dict = {"dbs": {},
-                      "triggers": {k: list(v) for k, v in self.triggers.items()}}
+                      "triggers": {k: list(v) for k, v in self.triggers.items()},
+                      "txn_changed": dict(self._txn_changed)}
         for dbname, tables in self.databases.items():
             snap["dbs"][dbname] = {}
             for tname, ts in tables.items():
@@ -6182,6 +6349,7 @@ class Engine:
 
     def _restore_state(self, snap: dict) -> None:
         self.triggers = {k: list(v) for k, v in snap["triggers"].items()}
+        self._txn_changed = dict(snap["txn_changed"])
         for dbname in list(self.databases):
             if dbname not in snap["dbs"]:
                 del self.databases[dbname]
@@ -6211,6 +6379,7 @@ class Engine:
                 ts.history = s["history"]
                 ts.history_ts = s["history_ts"]
                 ts.df = s["df"]
+                ts.changes += 1
                 if ts.df is not None:
                     ts.df.createOrReplaceTempView(tname)
 
@@ -6237,39 +6406,49 @@ class Engine:
 
     def _q_txn(self, sql: str) -> OkResult:
         """BEGIN/COMMIT/ROLLBACK + SAVEPOINT/ROLLBACK TO/RELEASE
-        (reference sql/plan/transaction.go:1-209)."""
+        (reference sql/plan/transaction.go:1-209). COMMIT records one
+        AS OF version per table the transaction changed; ROLLBACK
+        records none."""
         up = sql.strip().rstrip(";").upper()
         if up.startswith(("BEGIN", "START")):
+            self._end_txn(commit=True)  # BEGIN implicitly commits
             self._txn_snapshot = self._snapshot_state()
-            self._savepoints = {}
             return OkResult(0)
         if up.startswith("SAVEPOINT"):
             name = sql.split()[1].strip("`;")
-            if not hasattr(self, "_savepoints"):
-                self._savepoints = {}
             self._savepoints[name] = self._snapshot_state()
             return OkResult(0)
         if up.startswith("RELEASE"):
             name = sql.split()[-1].strip("`;")
-            getattr(self, "_savepoints", {}).pop(name, None)
+            self._savepoints.pop(name, None)
             return OkResult(0)
         if up.startswith("ROLLBACK"):
             m = re.match(r"ROLLBACK\s+(?:WORK\s+)?TO\s+(?:SAVEPOINT\s+)?`?(\w+)`?",
                          sql.strip(), re.I)
             if m:
                 name = m.group(1)
-                sp = getattr(self, "_savepoints", {}).get(name)
+                sp = self._savepoints.get(name)
                 if sp is None:
                     raise SqlError(f"savepoint {name!r} does not exist")
                 self._restore_state(sp)  # txn stays open
                 return OkResult(0)
-            snap = getattr(self, "_txn_snapshot", None)
-            if snap is not None:
-                self._restore_state(snap)
-            self._txn_snapshot = None
-            self._savepoints = {}
+            self._end_txn(commit=False)
             return OkResult(0)
-        # COMMIT
+        self._end_txn(commit=True)
+        return OkResult(0)
+
+    def _end_txn(self, commit: bool) -> None:
+        """Close the open transaction, if any: COMMIT records the final
+        snapshot of every table it changed, ROLLBACK restores BEGIN's
+        state."""
+        if self._txn_snapshot is None:
+            return
+        if commit:
+            for ts in self._txn_changed.values():
+                if ts.df is not None:
+                    self._record_version(ts)
+        else:
+            self._restore_state(self._txn_snapshot)
         self._txn_snapshot = None
         self._savepoints = {}
-        return OkResult(0)
+        self._txn_changed = {}

@@ -67,7 +67,7 @@ class FulltextIndex:
     columns: tuple[str, ...]
     key: str
     postings: DataFrame
-    base_version: int          # len(ts.history) the postings reflect
+    base_version: int          # TableState.changes the postings reflect
     view: str = ""             # temp-view name once registered
     ops_since_checkpoint: int = 0
     pending_rebuild: bool = False

@@ -525,9 +525,10 @@ ORDER BY version, k
 )
 def versioned_as_of_snapshots(spark, sf_dir):
     """AS OF <ordinal> time travel (reference sql/plan/versionable.go;
-    dolt binds commit ordinals): each DML statement produces a snapshot,
-    and AS OF n reads the table as it stood after the n-th version. The
-    result unions three historical reads with a version label."""
+    dolt binds commit ordinals): one snapshot per committed statement or
+    transaction — here each autocommit DML statement — and AS OF n reads
+    the table as it stood after the n-th version. The result unions three
+    historical reads with a version label."""
     eng = _eng(spark, sf_dir, "nation")
     eng.query("DROP TABLE IF EXISTS vh4")
     eng.query("CREATE TABLE vh4 (k BIGINT PRIMARY KEY, val BIGINT)")

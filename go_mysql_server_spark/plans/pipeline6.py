@@ -310,16 +310,16 @@ def pipeline_char_lm_score(spark, sf_dir):
         .repartition(F.col("doc_id"), F.col("source"))
     )
 
-    # r10: the model's per-bigram counts are DERIVED from the shared
-    # (doc, source, g) aggregate instead of a second normalize+explode
-    # pass over the src0 docs — SUM(n_dg) regrouped by g is exactly
-    # COUNT(*) over exploded src0 bigrams. The model branch now hangs off
-    # grp's exchange (ReusedExchange in the plan): the corpus is scanned,
-    # normalized and exploded ONCE for both the model and the scoring
-    # side (guide §1.2 fewer passes / §2.3 aggregate-before-shuffle; at
-    # scale this halves the dominant cost, the corpus-wide bigram
-    # explode). Interleaved A/B (min-of-6, noop): sf0.1 1.39→1.14 s,
-    # sf1 3.15→3.15 s, result diff 0.
+    # r10: the model's per-bigram counts are written as a regrouping of
+    # the shared (doc, source, g) aggregate — SUM(n_dg) regrouped by g is
+    # exactly COUNT(*) over exploded src0 bigrams. The plan does NOT
+    # reuse grp's exchange for it: Catalyst pushes the `source = 'src0'`
+    # filter below the shared aggregate, so the model branch is a
+    # separate scan with that filter pushed into the parquet reader (see
+    # the committed plans/r10/pipeline_char_lm_score_after.txt), which
+    # normalizes and explodes only the src0 docs. Interleaved A/B
+    # (min-of-6, noop): sf0.1 1.39→1.14 s, sf1 3.15→3.15 s, result
+    # diff 0.
     counts = (
         grp.filter(F.col("source") == "src0")
         .groupBy("g")

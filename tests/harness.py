@@ -123,3 +123,21 @@ def compare(spark_df, duck_rel) -> list[str]:
                 if len(problems) >= 10:
                     return problems
     return problems
+
+
+def count_jobs(spark, fn):
+    """(Spark jobs `fn()` launched, its result). The jobs are tagged with
+    a job group unique to this call; the status tracker learns of them
+    through the listener bus, which is drained before reading."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count_jobs")
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group)), result

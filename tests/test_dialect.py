@@ -136,3 +136,31 @@ def test_zh_collation_sql_text(spark):
     r = eng.query("SELECT s FROM zht ORDER BY s COLLATE "
                   "utf8mb4_zh_0900_as_cs")
     assert [row[0] for row in r.collect()] == ['爱好', '白马', '中国', 'abc']
+
+
+def test_div_casts_operands_not_provably_integral():
+    """MySQL DIV converts a non-integer operand to DECIMAL and truncates
+    toward zero; Spark's div rejects DOUBLE operands."""
+    assert transpile_select("SELECT 7 DIV 2") == "SELECT 7 DIV 2"
+    assert transpile_select("SELECT SUM(d) DIV 1000 FROM t") == (
+        "SELECT CAST(SUM(d) AS DECIMAL(38,10)) DIV 1000 FROM t")
+    # * / % DIV MOD share one left-associative level
+    assert transpile_select("SELECT a * b DIV 2 + 1 FROM t") == (
+        "SELECT CAST(a * b AS DECIMAL(38,10)) DIV 2 + 1 FROM t")
+
+
+def test_div_of_double_operands(spark):
+    from go_mysql_server_spark.engine import Engine
+
+    eng = Engine(spark)
+    got = eng.query("SELECT -7.5 DIV 2 AS a, CAST(7.5 AS DOUBLE) DIV 2 AS b, "
+                    "CAST(0.3 AS DOUBLE) DIV CAST(0.1 AS DOUBLE) AS c, "
+                    "7 DIV 2 AS d").collect()
+    assert [tuple(r) for r in got] == [(-3, 3, 3, 3)]
+    eng.query("CREATE TABLE divd (k BIGINT PRIMARY KEY, x DOUBLE)")
+    eng.query("INSERT INTO divd VALUES (1, 1234.75), (2, 2500.5), "
+              "(3, -0.25)")
+    # 1234.75 + 2500.5 - 0.25 = 3735.0 → 3735 DIV 1000 = 3
+    got = eng.query("SELECT SUM(x) DIV 1000 AS q, "
+                    "-SUM(x) DIV 1000 AS nq FROM divd").collect()
+    assert [tuple(r) for r in got] == [(3, -3)]

@@ -1572,3 +1572,200 @@ def test_ja_collation_order_and_equality(eng):
         "SELECT id FROM jat WHERE s COLLATE utf8mb4_ja_0900_as_cs = "
         "'カラス' COLLATE utf8mb4_ja_0900_as_cs ORDER BY id")) == [
         (2,), (3,)]
+
+
+# ---- one-pass DML: job-count pins, atomicity, versions per commit ---------
+
+
+@pytest.fixture()
+def pk_table(eng):
+    """A 500-row PRIMARY KEY table with no triggers, FKs or unique
+    indexes."""
+    eng.query("CREATE TABLE jp (k BIGINT PRIMARY KEY, c BIGINT, "
+              "s VARCHAR(1), p DOUBLE)")
+    eng.query("INSERT INTO jp SELECT id, id % 15, 'O', id * 1.5 "
+              "FROM range(500)")
+    return eng
+
+
+def _jobs(eng, sql):
+    from tests.harness import count_jobs
+
+    def run():
+        res = eng.query(sql)
+        return res.collect() if not isinstance(res, OkResult) else res
+
+    return count_jobs(eng.spark, run)
+
+
+def test_dml_job_count_pins(pk_table):
+    """Spark jobs per single-table DML statement (pins may only go down):
+    a literal VALUES batch is checked in Python and probed with one
+    IN-list job, then the table is rebuilt with one checkpoint job; an
+    UPDATE whose assigned columns carry no constraint and a DELETE only
+    count their rows (one job) before the checkpoint."""
+    eng = pk_table
+    for sql, pin, want in [
+        ("INSERT INTO jp VALUES (1000, 1, 'F', 2.5)", 2, 1),
+        ("INSERT INTO jp VALUES (1001, 1, 'F', 2.5), (1002, 2, 'P', 3.5)",
+         2, 2),
+        ("UPDATE jp SET p = p + 1.25, s = 'F' WHERE k = 7", 2, 1),
+        ("UPDATE jp SET c = c + 1 WHERE k = 8", 2, 1),
+        ("DELETE FROM jp WHERE k IN (3, 4, 1001)", 2, 3),
+    ]:
+        n, res = _jobs(eng, sql)
+        assert res.rows_affected == want, sql
+        assert n <= pin, f"{n} jobs > {pin}: {sql}"
+    n, got = _jobs(eng, "SELECT k, s, p FROM jp WHERE k = 7")
+    assert got == [(7, "F", 7 * 1.5 + 1.25)]
+    assert n <= 1
+    # INSERT ... SELECT: one fused aggregate, a semi-join count probe and
+    # the checkpoint
+    n, res = _jobs(eng, "INSERT INTO jp SELECT id + 2000, 1, 'O', 0.5 "
+                        "FROM range(100)")
+    assert res.rows_affected == 100
+    assert n <= 8
+    assert rows(eng.query("SELECT COUNT(*) FROM jp")) == [(600,)]
+
+
+@pytest.fixture()
+def ck_table(eng):
+    eng.query("CREATE TABLE ck (k BIGINT PRIMARY KEY, t TINYINT, "
+              "s VARCHAR(10) NOT NULL, v INT, CHECK (v >= 0))")
+    eng.query("INSERT INTO ck VALUES (1, 1, 'a', 1), (2, 2, 'b', 2)")
+    return eng
+
+
+_CK_BATCHES = [
+    # (multi-row INSERT body, strict error, rows INSERT IGNORE adds)
+    ("(10, 1, 'x', 1), (10, 2, 'y', 2)",
+     "duplicate primary key within inserted rows", [(10, 1, "x", 1)]),
+    ("(11, 1, 'x', 1), (1, 9, 'z', 9)",
+     "duplicate entry for primary key", [(11, 1, "x", 1)]),
+    ("(12, 1, NULL, 1), (13, 1, 'q', 1)",
+     "column 's' cannot be null", [(12, 1, "", 1), (13, 1, "q", 1)]),
+    ("(14, 300, 'x', 1), (15, 1, 'y', 1)",
+     "out of range value for column 't'",
+     [(14, 127, "x", 1), (15, 1, "y", 1)]),
+    ("(16, 1, 'x', -1), (17, 1, 'y', 1)",
+     "CHECK constraint violated", [(17, 1, "y", 1)]),
+]
+
+
+def _ck_state(eng):
+    return (sorted(rows(eng.query("SELECT * FROM ck"))),
+            len(eng._table("ck").history))
+
+
+@pytest.mark.parametrize("values,error,_added", _CK_BATCHES)
+def test_dml_failed_batch_is_atomic(ck_table, values, error, _added):
+    """A failing multi-row INSERT raises today's message and leaves the
+    rows and the AS OF version count as they were."""
+    before = _ck_state(ck_table)
+    with pytest.raises(SqlError, match=error):
+        ck_table.query(f"INSERT INTO ck VALUES {values}")
+    assert _ck_state(ck_table) == before
+
+
+@pytest.mark.parametrize("values,_error,added", _CK_BATCHES)
+def test_dml_insert_ignore_batches(ck_table, values, _error, added):
+    """The same batches under INSERT IGNORE: the first row per
+    duplicated key wins, clashing and CHECK-violating rows are skipped,
+    NULL takes the implicit default and out-of-range values clamp."""
+    before = sorted(rows(ck_table.query("SELECT * FROM ck")))
+    ck_table.query(f"INSERT IGNORE INTO ck VALUES {values}")
+    assert sorted(rows(ck_table.query("SELECT * FROM ck"))) == sorted(
+        before + added)
+
+
+def test_dml_error_precedence(ck_table):
+    """With several violations in one batch: integer range first, then
+    NOT NULL/CHECK, then the duplicate key."""
+    before = _ck_state(ck_table)
+    for values, error in [
+        ("(20, 1, NULL, -1), (20, 300, 'x', 1)", "out of range"),
+        ("(21, 1, 'x', -1), (21, 1, NULL, 1)", "cannot be null"),
+        ("(22, 1, 'x', -1), (22, 1, 'y', 1)", "CHECK constraint"),
+        ("(1, 1, 'x', 1), (1, 1, 'y', 1)", "within inserted rows"),
+    ]:
+        with pytest.raises(SqlError, match=error):
+            ck_table.query(f"INSERT INTO ck VALUES {values}")
+    with pytest.raises(SqlError, match="CHECK constraint violated"):
+        ck_table.query("UPDATE ck SET v = v - 5 WHERE k = 1")
+    with pytest.raises(SqlError, match="out of range value for column 't'"):
+        ck_table.query("UPDATE ck SET t = 200, v = -1 WHERE k = 2")
+    assert _ck_state(ck_table) == before
+
+
+def test_commit_records_one_version(pk_table):
+    """BEGIN, three DML statements, COMMIT: one AS OF version, and the
+    version before it still reads the pre-transaction rows."""
+    eng = pk_table
+    ts = eng._table("jp")
+    n0 = len(ts.history)
+    eng.query("BEGIN")
+    eng.query("INSERT INTO jp VALUES (900, 1, 'F', 1.0)")
+    eng.query("UPDATE jp SET s = 'P' WHERE k = 1")
+    eng.query("DELETE FROM jp WHERE k = 2")
+    assert len(ts.history) == n0
+    eng.query("COMMIT")
+    assert len(ts.history) == n0 + 1
+    prior = f"SELECT k, s FROM jp AS OF {n0 - 1} WHERE k IN (1, 2, 900)"
+    assert sorted(rows(eng.query(prior))) == [(1, "O"), (2, "O")]
+    now = f"SELECT k, s FROM jp AS OF {n0} WHERE k IN (1, 2, 900)"
+    assert sorted(rows(eng.query(now))) == [(1, "P"), (900, "F")]
+
+
+def test_rollback_records_no_version(pk_table):
+    eng = pk_table
+    ts = eng._table("jp")
+    n0 = len(ts.history)
+    eng.query("BEGIN")
+    eng.query("INSERT INTO jp VALUES (901, 1, 'F', 1.0)")
+    eng.query("UPDATE jp SET s = 'P' WHERE k = 1")
+    eng.query("ROLLBACK")
+    assert len(ts.history) == n0
+    assert rows(eng.query("SELECT COUNT(*) FROM jp")) == [(500,)]
+    # autocommit statements still record one version each
+    eng.query("INSERT INTO jp VALUES (902, 1, 'F', 1.0)")
+    assert len(ts.history) == n0 + 1
+
+
+def test_fulltext_match_inside_open_transaction(eng):
+    """MATCH inside BEGIN ... COMMIT sees the transaction's own writes:
+    index staleness follows the table's change counter, not the
+    committed versions."""
+    eng.query("CREATE TABLE ftx (id BIGINT PRIMARY KEY, body TEXT)")
+    eng.query("INSERT INTO ftx VALUES (1, 'spark engine'), (2, 'duck pond')")
+    eng.query("CREATE FULLTEXT INDEX ft_body ON ftx (body)")
+    q = ("SELECT id FROM ftx WHERE MATCH(body) AGAINST('window') "
+         "ORDER BY id")
+    assert rows(eng.query(q)) == []
+    eng.query("BEGIN")
+    eng.query("INSERT INTO ftx VALUES (3, 'window functions')")
+    assert rows(eng.query(q)) == [(3,)]
+    eng.query("UPDATE ftx SET body = 'window frames' WHERE id = 2")
+    assert rows(eng.query(q)) == [(2,), (3,)]
+    eng.query("ROLLBACK")
+    assert rows(eng.query(q)) == []
+    eng.query("INSERT INTO ftx VALUES (4, 'window again')")
+    assert rows(eng.query(q)) == [(4,)]
+
+
+def test_dml_composite_key_clash_probe(eng):
+    """The IN-list clash probe on a two-column PRIMARY KEY: plain INSERT
+    errors, IGNORE skips, REPLACE overwrites and ODKU folds only rows
+    whose whole key exists."""
+    eng.query("CREATE TABLE ck2 (a INT, b VARCHAR(5), v INT, "
+              "PRIMARY KEY (a, b))")
+    eng.query("INSERT INTO ck2 VALUES (1, 'x', 1), (2, 'y', 2)")
+    with pytest.raises(SqlError, match="duplicate entry for primary key"):
+        eng.query("INSERT INTO ck2 VALUES (1, 'z', 3), (2, 'y', 4)")
+    assert eng.query("INSERT IGNORE INTO ck2 VALUES (1, 'x', 9), "
+                     "(1, 'z', 3)").rows_affected == 1
+    assert eng.query("REPLACE INTO ck2 VALUES (2, 'y', 7)"
+                     ).rows_affected == 2
+    eng.query("INSERT INTO ck2 VALUES (5, 'q', 1), (2, 'y', 5) "
+              "ON DUPLICATE KEY UPDATE v = v + 100")
+    assert sorted(rows(eng.query("SELECT * FROM ck2"))) == [
+        (1, "x", 1), (1, "z", 3), (2, "y", 107), (5, "q", 1)]
