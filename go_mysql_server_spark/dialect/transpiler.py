@@ -1810,8 +1810,10 @@ def _rewrite_div(sql: str) -> str:
     """x DIV y: MySQL converts a non-integer operand to DECIMAL and
     truncates the quotient toward zero; Spark's `div` accepts integral
     and DECIMAL operands but rejects DOUBLE (BINARY_OP_DIFF_TYPES). Cast
-    every operand not provably integral to DECIMAL(38,10) — exact for any
-    BIGINT and for a DOUBLE's shortest decimal form."""
+    every operand not provably integral to DECIMAL(38,18): it holds any
+    BIGINT, and a scale of 18 never rounds a DOUBLE below 1e20 (or a
+    DECIMAL of scale <= 18) across an integer, so the truncated quotient
+    is MySQL's."""
     pos = 0
     while True:
         m = _DIV_WORD.search(sql, pos)
@@ -1827,7 +1829,7 @@ def _rewrite_div(sql: str) -> str:
         left = sql[start:m.start()].strip()
         right = sql[m.end():end].strip()
         cast = [x if _integral_operand(x)
-                else f"CAST({x} AS DECIMAL(38,10))" for x in (left, right)]
+                else f"CAST({x} AS DECIMAL(38,18))" for x in (left, right)]
         # `WHERE(a) DIV 2`: keep the keyword apart from the new CAST
         sep = " " if sql[start - 1:start].isalnum() else ""
         repl = f"{sep}{cast[0]} DIV {cast[1]}"

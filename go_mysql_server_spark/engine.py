@@ -3947,30 +3947,19 @@ class Engine:
                 select_cols.append(F.lit("").alias(c.name))
             else:
                 select_cols.append(F.lit(None).cast(c.spark_type).alias(c.name))
-        # Strict-mode out-of-range check on PRE-cast values (reference
-        # sql/types/number.go Convert errors instead of wrapping; INSERT
-        # IGNORE and non-strict sql_mode clamp via _lenient_cast instead).
-        # The pre-cast values ride along as hidden columns into the one
-        # check pass below — unless a BEFORE trigger (which may rebuild the
-        # rows) or a UNIQUE index check could raise first: then they are
-        # checked up front, keeping range errors first.
+        # Strict-mode out-of-range check on PRE-cast values, before any
+        # other check (reference sql/types/number.go Convert errors instead
+        # of wrapping; INSERT IGNORE and non-strict sql_mode clamp via
+        # _lenient_cast instead). Integral sources whose type fits the
+        # column can never fail it.
         bounded = [] if lenient else [
             c.name for c in ts.columns
             if c.int_bounds is not None and c.name in target_cols
             and not _int_range_within(src_types[c.name], c.int_bounds)]
-        if bounded and (
-                any(ix.unique for ix in ts.indexes)
-                or any(t.event == "INSERT" and t.timing == "BEFORE"
-                       for t in self.triggers.get(ts.name, []))):
+        if bounded:
             self._check_batch(named, self._range_checks(
                 ts, {b: F.col(b) for b in bounded})).raise_violation()
-            bounded = []
-        hidden = [f"__pre_{b}" for b in bounded]
-        range_checks = self._range_checks(
-            ts, {b: F.col(h) for b, h in zip(bounded, hidden)})
-        incoming = named.select(
-            *select_cols,
-            *[F.col(b).alias(h) for b, h in zip(bounded, hidden)])
+        incoming = named.select(*select_cols)
         # cross-column defaults evaluate in TABLE ORDER over the assembled
         # row, so a default can read a provided column anywhere in the row
         # and the result of any default evaluated before it
@@ -4035,17 +4024,18 @@ class Engine:
         self._replace_batch_dropped = 0
         incoming, uq_victims = self._enforce_unique_indexes(
             ts, incoming, ignore, verb, odku=odku is not None)
+        # rows REPLACE dropped as earlier duplicates on a unique index
+        uq_dropped = self._replace_batch_dropped
         # ONE pass for the row count, every row-level check and the
         # within-batch duplicate keys (IGNORE already filtered violating
-        # rows, so it only counts); errors keep their precedence: range,
-        # then NOT NULL/ENUM/SET/CHECK, then FK, then duplicate keys
+        # rows, so it only counts); errors keep their precedence: range
+        # (above), then NOT NULL/ENUM/SET/CHECK, then FK, then duplicate
+        # keys
         pk = list(ts.primary_key)
         chk = self._check_batch(
-            incoming,
-            range_checks + ([] if ignore else self._row_checks(ts, lenient)),
-            pk)
-        incoming = incoming.drop(*hidden)
-        n_new = n_given if ignore else chk.n
+            incoming, [] if ignore else self._row_checks(ts, lenient), pk)
+        # the statement counts (and numbers) the rows it was given
+        n_new = n_given if ignore else chk.n + uq_dropped
         if number_omitted_auto_inc:
             ts.auto_inc_next += n_new
         chk.raise_violation()
@@ -4891,22 +4881,24 @@ class Engine:
             return OkResult(self._found_rows_n)
         utrigs = [t for t in self.triggers.get(ts.name, [])
                   if t.event == "UPDATE"]
-        # Strict-mode range check on the PRE-cast assigned values: they
-        # ride along as hidden columns into the one check pass over the
-        # matched rows, unless UPDATE triggers (which branch on the match
-        # count and may rebuild the rows) run first — then the count and
-        # the range check come up front
+        # Strict-mode range check on the PRE-cast assigned values, before
+        # any other check; integral sources whose type fits the column can
+        # never fail it. UPDATE triggers branch on the match count, so it
+        # comes up front with them.
         pre = {} if ignore else {
             c.name: F.expr(transpile_select(assigns[c.name]))
             for c in ts.columns
             if c.int_bounds is not None and c.name in assigns}
+        pre_types = dict(matched.select(
+            *[e.alias(c) for c, e in pre.items()]).dtypes) if pre else {}
+        range_checks = self._range_checks(ts, {
+            c: e for c, e in pre.items()
+            if not _int_range_within(pre_types[c], by_name[c].int_bounds)})
         n_match = None
-        if utrigs:
-            first = self._check_batch(matched, self._range_checks(ts, pre))
+        if utrigs or range_checks:
+            first = self._check_batch(matched, range_checks)
             first.raise_violation()
             n_match = first.n
-            pre = {}
-        hidden = {c: f"__pre_{c}" for c in pre}
 
         def _assigned(c):
             expr = F.expr(transpile_select(assigns[c.name]))
@@ -4931,12 +4923,7 @@ class Engine:
                            for t in utrigs))
         old_carry = ([F.col(c.name).alias(f"__old__{c.name}")
                       for c in ts.columns] if seq_rows else [])
-        updated = base.select(*out_cols, "__matched", *old_carry,
-                              *[pre[c].alias(h) for c, h in hidden.items()])
-        pre_types = dict(updated.dtypes) if hidden else {}
-        range_checks = self._range_checks(ts, {
-            c: F.col(h) for c, h in hidden.items()
-            if not _int_range_within(pre_types[h], by_name[c].int_bounds)})
+        updated = base.select(*out_cols, "__matched", *old_carry)
         if any(c.enum_values is not None or c.set_values is not None
                or c.fsp is not None or c.is_year for c in ts.columns):
             updated = self._enum_set_normalize(ts, updated)
@@ -4989,9 +4976,9 @@ class Engine:
                 self._restore_state(snap)
             raise
         try:
-            # ONE pass over the matched rows: their count, the range
-            # check and every row-level constraint (UPDATE IGNORE reverts
-            # violating rows instead, so it only counts)
+            # ONE pass over the matched rows: their count and every
+            # row-level constraint (UPDATE IGNORE reverts violating rows
+            # instead, so it only counts)
             new_rows = updated.filter("__matched")
             # BEFORE triggers may write any column; otherwise the
             # assigned and the generated ones change
@@ -5000,7 +4987,7 @@ class Engine:
                                      if c.generated}
             row_checks = ([] if explicit_ignore
                           else self._row_checks(ts, changed=changed))
-            chk = self._check_batch(new_rows, range_checks + row_checks)
+            chk = self._check_batch(new_rows, row_checks)
             n_match = chk.n
             self._found_rows_n = n_match
             chk.raise_violation()
@@ -5023,8 +5010,7 @@ class Engine:
                       for p in needed],
                 )
                 self._apply_fk_on_update(ts, mapping, fks)
-            ts.df = updated.drop("__matched", *hidden.values()) \
-                .localCheckpoint(eager=True)
+            ts.df = updated.drop("__matched").localCheckpoint(eager=True)
             self._register(ts)
             if n_match:
                 if pairs_old is not None:
@@ -5487,9 +5473,7 @@ class Engine:
                                               limit_n, offset_n)
         deleted = ts.df.filter(where)
         if (any(t.event == "DELETE" for t in self.triggers.get(ts.name, []))
-                or any(fk.parent_table == ts.name
-                       for child in self._db(None).values()
-                       for fk in child.foreign_keys)):
+                or self._referencing_fks(ts)):
             # triggers and FK actions read the victims again: pin them
             deleted = deleted.localCheckpoint(eager=True)
         n = self._check_batch(deleted, []).n
@@ -5625,63 +5609,63 @@ class Engine:
         """Referential actions (reference foreign_key_editor.go:1-849):
         RESTRICT errors, CASCADE deletes children recursively, SET NULL
         clears the referencing columns — each as one distributed join."""
-        for child_ts in list(self._db(None).values()):
-            for fk in child_ts.foreign_keys:
-                if fk.parent_table != parent_ts.name:
-                    continue
-                pdefs = {c.name: c for c in parent_ts.columns}
-                cdefs = {c.name: c for c in child_ts.columns}
-                keys = deleted.select(
-                    *[self._fk_key_expr(pdefs.get(p), cdefs.get(c), p)
-                      .alias(c)
-                      for c, p in zip(fk.columns, fk.parent_columns)])
-                matching = child_ts.df.join(
-                    keys, list(fk.columns), "left_semi",
+        for child_ts, fk in self._referencing_fks(parent_ts):
+            pdefs = {c.name: c for c in parent_ts.columns}
+            cdefs = {c.name: c for c in child_ts.columns}
+            keys = deleted.select(
+                *[self._fk_key_expr(pdefs.get(p), cdefs.get(c), p)
+                  .alias(c)
+                  for c, p in zip(fk.columns, fk.parent_columns)])
+            matching = child_ts.df.join(
+                keys, list(fk.columns), "left_semi",
+            )
+            n_kids = matching.count()
+            if not n_kids:
+                continue
+            if fk.on_delete == "RESTRICT":
+                raise SqlError(
+                    f"cannot delete from {parent_ts.name!r}: {n_kids} row(s) "
+                    f"in {child_ts.name!r} reference it (RESTRICT)")
+            if fk.on_delete == "CASCADE":
+                self._apply_fk_on_delete(child_ts, matching)
+                child_ts.df = child_ts.df.join(
+                    keys,
+                    list(fk.columns), "left_anti",
+                ).select(  # name-list joins put join keys FIRST —
+                    # restore the declared column order
+                    *[c.name for c in child_ts.columns]
+                ).localCheckpoint(eager=True)
+                self._register(child_ts)
+            else:  # SET NULL
+                renamed = keys
+                hit = child_ts.df.join(renamed, list(fk.columns), "left_semi")
+                miss = child_ts.df.join(renamed, list(fk.columns), "left_anti")
+                nulled = hit.select(
+                    *[F.lit(None).cast(
+                        next(c.spark_type for c in child_ts.columns
+                             if c.name == col)).alias(col)
+                      if col in fk.columns else F.col(col)
+                      for col in child_ts.df.columns]
                 )
-                n_kids = matching.count()
-                if not n_kids:
-                    continue
-                if fk.on_delete == "RESTRICT":
-                    raise SqlError(
-                        f"cannot delete from {parent_ts.name!r}: {n_kids} row(s) "
-                        f"in {child_ts.name!r} reference it (RESTRICT)")
-                if fk.on_delete == "CASCADE":
-                    self._apply_fk_on_delete(child_ts, matching)
-                    child_ts.df = child_ts.df.join(
-                        keys,
-                        list(fk.columns), "left_anti",
-                    ).select(  # name-list joins put join keys FIRST —
-                        # restore the declared column order
-                        *[c.name for c in child_ts.columns]
-                    ).localCheckpoint(eager=True)
-                    self._register(child_ts)
-                else:  # SET NULL
-                    renamed = keys
-                    hit = child_ts.df.join(renamed, list(fk.columns), "left_semi")
-                    miss = child_ts.df.join(renamed, list(fk.columns), "left_anti")
-                    nulled = hit.select(
-                        *[F.lit(None).cast(
-                            next(c.spark_type for c in child_ts.columns
-                                 if c.name == col)).alias(col)
-                          if col in fk.columns else F.col(col)
-                          for col in child_ts.df.columns]
-                    )
-                    out = miss.unionByName(nulled).select(
-                        *[c.name for c in child_ts.columns])
-                    if any(c.generated for c in child_ts.columns):
-                        out = self._compute_generated(child_ts, out)
-                    child_ts.df = out.localCheckpoint(eager=True)
-                    self._register(child_ts)
+                out = miss.unionByName(nulled).select(
+                    *[c.name for c in child_ts.columns])
+                if any(c.generated for c in child_ts.columns):
+                    out = self._compute_generated(child_ts, out)
+                child_ts.df = out.localCheckpoint(eager=True)
+                self._register(child_ts)
 
     def _referencing_fks(self, parent_ts: TableState,
-                         changed_cols: set[str]) -> list[tuple["TableState", "ForeignKey"]]:
-        """Child FKs whose parent columns intersect the columns an UPDATE
-        assigns on `parent_ts`."""
+                         changed_cols: set[str] | None = None
+                         ) -> list[tuple["TableState", "ForeignKey"]]:
+        """Child FKs referencing `parent_ts` — with `changed_cols`, only
+        those whose parent columns intersect the columns an UPDATE
+        assigns."""
         out = []
         for child_ts in list(self._db(None).values()):
             for fk in child_ts.foreign_keys:
-                if (fk.parent_table == parent_ts.name
-                        and set(fk.parent_columns) & changed_cols):
+                if fk.parent_table == parent_ts.name and (
+                        changed_cols is None
+                        or set(fk.parent_columns) & changed_cols):
                     out.append((child_ts, fk))
         return out
 

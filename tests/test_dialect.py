@@ -143,10 +143,10 @@ def test_div_casts_operands_not_provably_integral():
     toward zero; Spark's div rejects DOUBLE operands."""
     assert transpile_select("SELECT 7 DIV 2") == "SELECT 7 DIV 2"
     assert transpile_select("SELECT SUM(d) DIV 1000 FROM t") == (
-        "SELECT CAST(SUM(d) AS DECIMAL(38,10)) DIV 1000 FROM t")
+        "SELECT CAST(SUM(d) AS DECIMAL(38,18)) DIV 1000 FROM t")
     # * / % DIV MOD share one left-associative level
     assert transpile_select("SELECT a * b DIV 2 + 1 FROM t") == (
-        "SELECT CAST(a * b AS DECIMAL(38,10)) DIV 2 + 1 FROM t")
+        "SELECT CAST(a * b AS DECIMAL(38,18)) DIV 2 + 1 FROM t")
 
 
 def test_div_of_double_operands(spark):
@@ -164,3 +164,26 @@ def test_div_of_double_operands(spark):
     got = eng.query("SELECT SUM(x) DIV 1000 AS q, "
                     "-SUM(x) DIV 1000 AS nq FROM divd").collect()
     assert [tuple(r) for r in got] == [(3, -3)]
+
+
+def test_div_does_not_round_operands_up(spark):
+    """The DECIMAL cast keeps enough scale that an operand just below an
+    integer still truncates below it, as in MySQL."""
+    from go_mysql_server_spark.engine import Engine
+
+    eng = Engine(spark)
+    got = eng.query("SELECT 2.99999999999 DIV 1 AS a, "
+                    "-2.99999999999 DIV 1 AS b").collect()
+    assert [tuple(r) for r in got] == [(2, -2)]
+    # ten doubles 0.1 added in order make 0.9999999999999999
+    tenth = " + ".join(["CAST(0.1 AS DOUBLE)"] * 10)
+    got = eng.query(f"SELECT ({tenth}) AS s, ({tenth}) DIV 1 AS q").collect()
+    assert [tuple(r) for r in got] == [(0.9999999999999999, 0)]
+    eng.query("CREATE TABLE divt (k BIGINT PRIMARY KEY, x DOUBLE)")
+    eng.query("INSERT INTO divt VALUES " + ", ".join(
+        f"({i}, 0.1)" for i in range(10)))
+    # a SUM's order of addition may vary: its DIV truncates whatever sum
+    # it reaches
+    s, q = eng.query("SELECT SUM(x) AS s, SUM(x) DIV 1 AS q "
+                     "FROM divt").collect()[0]
+    assert q == int(s)

@@ -1694,7 +1694,16 @@ def test_dml_error_precedence(ck_table):
         ck_table.query("UPDATE ck SET v = v - 5 WHERE k = 1")
     with pytest.raises(SqlError, match="out of range value for column 't'"):
         ck_table.query("UPDATE ck SET t = 200, v = -1 WHERE k = 2")
+    # sources that are not literal VALUES: an INSERT ... SELECT, and an
+    # assigned value wider than the column
+    with pytest.raises(SqlError, match="out of range value for column 't'"):
+        ck_table.query("INSERT INTO ck SELECT id + 30, id * 100, NULL, -1 "
+                       "FROM range(3)")
+    with pytest.raises(SqlError, match="out of range value for column 't'"):
+        ck_table.query("UPDATE ck SET t = v * 100, s = NULL WHERE k = 2")
     assert _ck_state(ck_table) == before
+    ck_table.query("UPDATE ck SET t = v * 60 WHERE k = 2")
+    assert rows(ck_table.query("SELECT t FROM ck WHERE k = 2")) == [(120,)]
 
 
 def test_commit_records_one_version(pk_table):
@@ -1769,3 +1778,18 @@ def test_dml_composite_key_clash_probe(eng):
               "ON DUPLICATE KEY UPDATE v = v + 100")
     assert sorted(rows(eng.query("SELECT * FROM ck2"))) == [
         (1, "x", 1), (1, "z", 3), (2, "y", 107), (5, "q", 1)]
+
+
+def test_replace_unique_duplicates_in_batch(eng):
+    """REPLACE with a duplicate on a UNIQUE index inside its own batch:
+    every given row counts (the earlier one was inserted, then deleted)
+    and takes an auto-increment id, so the next INSERT gets a fresh id."""
+    eng.query("CREATE TABLE ru (id BIGINT AUTO_INCREMENT PRIMARY KEY, "
+              "u VARCHAR(5), UNIQUE KEY uu (u))")
+    assert eng.query("REPLACE INTO ru (u) VALUES ('a'), ('a')"
+                     ).rows_affected == 3
+    assert rows(eng.query("SELECT id, u FROM ru")) == [(2, "a")]
+    assert eng.query("INSERT INTO ru (u) VALUES ('b')").rows_affected == 1
+    assert sorted(rows(eng.query("SELECT id, u FROM ru"))) == [
+        (2, "a"), (3, "b")]
+
