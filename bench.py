@@ -3,7 +3,8 @@
 
 Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": <sf>}
+   "queries": {name: sec, ...}, "jobs": {name: Spark jobs, ...},
+   "sf": <sf>}
 
 Every query runs end-to-end (plan + execute + collect); the first query is
 preceded by a session warm-up so JVM/codegen startup isn't billed to it.
@@ -77,12 +78,19 @@ def main() -> None:
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
     queries = all_queries()
     samples: dict[str, list[float]] = {name: [] for name in HEADLINE}
+    # Spark jobs each query launched (build + collect), read from the
+    # scheduler's job counter outside the timed region; the last
+    # repetition's count is reported
+    jobs: dict[str, int] = {}
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
     for rep in range(reps):
         for name in HEADLINE:  # fixed order every repetition
             fn = queries[name]
+            jobs_before = scheduler.numTotalJobs()
             start = time.perf_counter()
             rows = fn(spark, sf_dir).collect()
             dt = round(time.perf_counter() - start, 3)
+            jobs[name] = scheduler.numTotalJobs() - jobs_before
             samples[name].append(dt)
             print(f"# rep{rep} {name}: {dt:.3f}s ({len(rows)} rows)",
                   file=sys.stderr)
@@ -105,6 +113,7 @@ def main() -> None:
             sum(timings[n] for n in r1_set if n in timings), 3),
         "queries": timings,
         "spread": spread,
+        "jobs": jobs,
         "reps": reps,
         "sf": sf,
     }))

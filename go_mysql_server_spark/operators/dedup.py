@@ -235,9 +235,9 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                 F.explode(F.split(F.lower(F.trim(F.col(text_col))), " +")).alias("tok"))
         .select(F.col(id_col), md5_int60(F.col("tok")).alias("h"))
     )
+    # each vote sum is one parsed expression: one py4j call per bit
     votes = toks.groupBy(id_col).agg(*[
-        F.sum(F.expr(f"CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END"))
-        .alias(f"s_{b}")
+        F.expr(f"sum(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS s_{b}")
         for b in range(bits)
     ])
     assemble = " + ".join(

@@ -13,6 +13,27 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load(spark, sf_dir, name)
 
 
+def sorted_result(df: DataFrame, *cols: Column | str) -> DataFrame:
+    """The final ORDER BY of a result the caller collects whole.
+
+    `orderBy` with no limit plans a range-partitioned exchange, and its
+    RangePartitioner runs a sampling job of its own that re-runs every
+    upstream stage before the real shuffle. Here one single-partition
+    exchange feeds a local sort instead: one job fewer, same rows in the
+    same order (the sort keys, directions and null ordering are the
+    caller's, as with `orderBy`). Upstream stages keep their parallelism;
+    only the sort of rows that all end in one driver anyway runs in one
+    task (`repartition(1)`, not `coalesce(1)`, which would collapse the
+    final aggregate's stage as well).
+
+    Use it only for output the caller collects. When the row count is
+    bounded by construction (a top-k, `qids × k`), use
+    `orderBy(...).limit(bound)` instead, which plans a
+    TakeOrderedAndProject and needs no exchange at all.
+    """
+    return df.repartition(1).sortWithinPartitions(*cols)
+
+
 def rsum(col: Column | str, scale: int = 2) -> Column:
     """Deterministic float aggregate: round(sum(x), scale).
 

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ._util import t
+from ._util import sorted_result, t
 from .registry import query
 
 
@@ -71,14 +71,14 @@ def agg_count_distinct(spark, sf_dir):
     expression/distinct.go). Spark plans distinct aggs via expand+two-phase
     — no driver-side dedup."""
     li = t(spark, sf_dir, "lineitem")
-    return (
+    return sorted_result(
         li.groupBy("l_linestatus")
         .agg(
             F.countDistinct("l_suppkey").alias("n_supp"),
             F.countDistinct("l_partkey").alias("n_part"),
             F.round(F.sum_distinct(F.col("l_quantity")), 2).alias("sum_distinct_qty"),
-        )
-        .orderBy("l_linestatus")
+        ),
+        "l_linestatus",
     )
 
 

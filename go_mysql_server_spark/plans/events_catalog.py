@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ._util import t
+from ._util import sorted_result, t
 from .registry import query
 
 
@@ -97,7 +97,7 @@ def events_sessionization(spark, sf_dir):
     Reference analogue: none (GMS has no session semantics) — additive."""
     e = t(spark, sf_dir, "events")
     t(spark, sf_dir, "events").createOrReplaceTempView("v_events_sess")
-    return spark.sql(
+    return sorted_result(spark.sql(
         """
         WITH marked AS (
           SELECT user_id, ts, event_id, value,
@@ -118,9 +118,8 @@ def events_sessionization(spark, sf_dir):
                ROUND(SUM(value), 4) AS session_value
         FROM sessions
         GROUP BY user_id, session_id
-        ORDER BY user_id, session_id
         """
-    )
+    ), "user_id", "session_id")
 
 
 @query(

@@ -26,7 +26,7 @@ from ..operators.text import (
     token_count_of_tokens,
     token_count_sql,
 )
-from ._util import t
+from ._util import sorted_result, t
 from .registry import query
 
 
@@ -59,13 +59,13 @@ def dedup_exact(spark, sf_dir):
 )
 def dedup_minhash_lsh(spark, sf_dir):
     docs = t(spark, sf_dir, "documents")
-    return dedup.minhash_candidate_pairs(docs).orderBy("a", "b")
+    return sorted_result(dedup.minhash_candidate_pairs(docs), "a", "b")
 
 
 @query("dedup_simhash", oracle=dedup.simhash_sql() + " ORDER BY doc_id")
 def dedup_simhash(spark, sf_dir):
     docs = t(spark, sf_dir, "documents")
-    return dedup.simhash(docs).orderBy("doc_id")
+    return sorted_result(dedup.simhash(docs), "doc_id")
 
 
 @query(
@@ -86,7 +86,9 @@ def similarity_topk_cosine(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("qid"), "embedding"
     )
-    return similarity.brute_force_topk(emb, queries, k=5).orderBy("qid", "rank")
+    # 5 queries x k=5: bounded, so a top-k instead of a sorted exchange
+    return (similarity.brute_force_topk(emb, queries, k=5)
+            .orderBy("qid", "rank").limit(5 * 5))
 
 
 @query(
@@ -116,7 +118,7 @@ def text_features(spark, sf_dir):
     # Tokenize once into a column: each per-language stopword filter is an
     # interpreted HOF, and CSE does not reach fallback children — inline
     # tokens() would re-split per reference (see langid_of_tokens).
-    return (
+    return sorted_result(
         spread(t(spark, sf_dir, "documents"), "doc_id")
         .select("doc_id", c, tokens(c).alias("_toks"))
         .select(
@@ -125,8 +127,8 @@ def text_features(spark, sf_dir):
             bpe_token_count(c).alias("n_bpe_tokens"),
             langid_of_tokens(F.col("_toks")).alias("pred_lang"),
             quality_score_of_tokens(c, F.col("_toks")).alias("quality"),
-        )
-        .orderBy("doc_id")
+        ),
+        "doc_id",
     )
 
 
@@ -174,7 +176,7 @@ def multimodal_decode(spark, sf_dir):
     boundary). On a cluster the scan's own splits provide parallelism."""
     docs = t(spark, sf_dir, "documents")
     images = multimodal.documents_as_images(docs)
-    return multimodal.decode_images(images).orderBy("doc_id")
+    return sorted_result(multimodal.decode_images(images), "doc_id")
 
 
 @query(

@@ -17,7 +17,7 @@ from ..operators.similarity import cosine, lsh_signature
 from ..operators.text import (quality_score_of_tokens, quality_score_sql,
                               tokens)
 from ..session import iter_checkpoint
-from ._util import t
+from ._util import sorted_result, t
 from .registry import query
 
 # ---- PII scrubbing ----------------------------------------------------------
@@ -509,7 +509,7 @@ def pipeline_cluster_keep_best(spark, sf_dir):
                     F.col("text"), F.col("_toks")).alias("q")))
     w = Window.partitionBy("cluster_id").orderBy(F.desc("q"), "doc_id")
     wc = Window.partitionBy("cluster_id")
-    return (
+    return sorted_result(
         scored.select(
             "cluster_id", "doc_id", "q",
             F.row_number().over(w).alias("rn"),
@@ -520,8 +520,8 @@ def pipeline_cluster_keep_best(spark, sf_dir):
             "cluster_id", F.col("doc_id").alias("kept_doc"),
             F.col("q").alias("quality"),
             F.col("n_members").cast("long").alias("n_members"),
-        )
-        .orderBy("cluster_id")
+        ),
+        "cluster_id",
     )
 
 

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from ..operators.similarity import ivf_probe_topk, ivf_probe_topk_sql
 from ..operators.text import tokens, tokens_sql
-from ._util import t
+from ._util import sorted_result, t
 from .registry import query
 
 # ---- IVF probe ANN ----------------------------------------------------------
@@ -223,7 +223,7 @@ def pipeline_domain_mix(spark, sf_dir):
         .agg(F.count("*").alias("kept_docs"),
              F.sum("n_tok").cast("long").alias("kept_tokens"))
     )
-    return (
+    return sorted_result(
         rates.join(kept, "lang", "left")
         .select(
             "lang", F.col("tw").alias("target_weight"),
@@ -231,6 +231,6 @@ def pipeline_domain_mix(spark, sf_dir):
             F.round("rate", 6).alias("accept_rate"),
             F.coalesce("kept_docs", F.lit(0)).alias("kept_docs"),
             F.coalesce("kept_tokens", F.lit(0)).alias("kept_tokens"),
-        )
-        .orderBy("lang")
+        ),
+        "lang",
     )

@@ -20,11 +20,12 @@ DuckDB twin:
 
 from __future__ import annotations
 
+import json
 
 from pyspark.sql import functions as F
 
 from ..operators.text import normalize_text, normalize_text_sql, tokens, tokens_sql
-from ._util import t
+from ._util import sorted_result, t
 from ..operators.scale import spread
 from .registry import query
 
@@ -96,7 +97,7 @@ def pipeline_quality_rules(spark, sf_dir):
     )
     c = F.col
     flag = lambda cond: F.sum(F.when(cond, 1).otherwise(0)).cast("long")  # noqa: E731
-    return (
+    return sorted_result(
         feat.groupBy("source")
         .agg(
             F.count("*").alias("n_docs"),
@@ -111,8 +112,8 @@ def pipeline_quality_rules(spark, sf_dir):
                 & (c("distinct_ratio") >= 0.4)
                 & (c("n_sw") >= 1)
             ).alias("kept"),
-        )
-        .orderBy("source")
+        ),
+        "source",
     )
 
 
@@ -180,7 +181,7 @@ def pipeline_sequence_packing(spark, sf_dir):
             F.sum("n_tok").alias("seq_tokens"),
         )
     )
-    return (
+    return sorted_result(
         seqs.groupBy("source", "lang")
         .agg(
             F.count("*").alias("n_seqs"),
@@ -190,8 +191,8 @@ def pipeline_sequence_packing(spark, sf_dir):
             F.round(
                 F.sum("seq_tokens") / (F.count("*") * float(SEQ_BUDGET)), 6
             ).alias("fill_ratio"),
-        )
-        .orderBy("source", "lang")
+        ),
+        "source", "lang",
     )
 
 
@@ -331,7 +332,7 @@ def pipeline_char_lm_score(spark, sf_dir):
                 / F.sum("c").over(Window.partitionBy()))
         .cast("long").alias("fpm"),
     )
-    return (
+    return sorted_result(
         grp.join(F.broadcast(fpm_df), "g", "left")
         .groupBy("doc_id", "source")
         .agg(
@@ -342,8 +343,8 @@ def pipeline_char_lm_score(spark, sf_dir):
         .withColumn(
             "avg_fpm",
             F.floor(F.col("score_sum") / F.col("n_bigrams")).cast("long"),
-        )
-        .orderBy("doc_id")
+        ),
+        "doc_id",
     )
 
 
@@ -539,44 +540,27 @@ def similarity_ivf_pq_search(spark, sf_dir):
     (partition pruning at 100 TB: the corpus is written clustered by cell),
     then candidates rank by ADC — the distance from the RAW query vector to
     each candidate's PQ-RECONSTRUCTED form, computed from the candidate's
-    {M_SUB} code words against the inlined codebook without ever touching
-    the candidate's raw floats (the memory win that makes PQ indexes fit
-    in RAM). Both quantizers are deterministic (seeded from lowest-id
-    vectors) and tiny, so cell assignment AND code assignment are scan-side
-    projections; the only corpus-touching operators are the broadcast probe
-    join and the per-query top-k window. Distances accumulate in fixed
-    index order on both engines (oracle twin unrolls the same arithmetic).
+    {M_SUB} code words against the codebook without ever touching the
+    candidate's raw floats (the memory win that makes PQ indexes fit in
+    RAM). Both quantizers are deterministic (seeded from lowest-id
+    vectors) and tiny: the {IVFPQ_NCELLS} centroids, whose first {PQ_K}
+    are also the codebook, travel as ONE folded array literal, so cell
+    assignment AND code assignment are scan-side projections; the only
+    corpus-touching operators are the broadcast probe join and the
+    per-query top-k window. Distances accumulate in fixed index order on
+    both engines (the oracle twin unrolls the same arithmetic).
 
     Mirrors the reference's ANN ORDER BY surface
     (sql/analyzer/replace_order_by_distance.go) with a real IVF-PQ index."""
     from pyspark.sql import Window
 
     emb = t(spark, sf_dir, "embeddings")
-    crows = [
-        (int(r[0]), [float(x) for x in r[1]])
-        for r in emb.filter(F.col("vec_id") < IVFPQ_NCELLS)
-        .select("vec_id", "embedding").orderBy("vec_id").collect()
-    ]
-    seed = [v for _, v in crows[:PQ_K]]
-
-    # Expressions are rendered as SQL TEXT and parsed with ONE F.expr call
-    # each — the Column-by-Column construction this replaces cost ~3 s of
-    # py4j round-trips per plan build (r5 profile), pure driver overhead.
-    # Literal doubles go through CAST('<repr>' AS DOUBLE): correctly-
-    # rounded parse, so the arithmetic (and the oracle hash) is unchanged.
-
-    def dlit(x: float) -> str:
-        return f"CAST('{x!r}' AS DOUBLE)"
-
-    def vec_sql(vals) -> str:
-        return "array(" + ", ".join(dlit(v) for v in vals) + ")"
-
-    cb_sql = "array(" + ", ".join(vec_sql(v) for v in seed) + ")"
-    e_dbl_sql = "transform(embedding, x -> CAST(x AS DOUBLE))"
-
-    def dot_sql(a: str, b: str) -> str:
-        return (f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
-                f"CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)")
+    # one job: a plain collect, ordered here by the unique vec_id
+    crows = sorted(
+        ((int(r[0]), [float(x) for x in r[1]])
+         for r in emb.filter(F.col("vec_id") < IVFPQ_NCELLS)
+         .select("vec_id", "embedding").collect()),
+        key=lambda r: r[0])
 
     def cnorm(vals) -> float:
         sq = 0.0
@@ -584,20 +568,39 @@ def similarity_ivf_pq_search(spark, sf_dir):
             sq += x * x
         return sq ** 0.5
 
+    # The centroids (and their norms) are ONE from_json literal each,
+    # which the optimizer folds into a single array Literal; every
+    # expression below is SQL text parsed by one F.expr call and walks
+    # that array with higher-order functions. Inlined as one
+    # CAST('<repr>' AS DOUBLE) literal per double, the score projection
+    # alone (512 literals) took 45-75 ms of Catalyst analysis to build,
+    # against 12-14 ms for the folded form and the column holding it
+    # (2 Spark cores, 4-core host). json.dumps writes the shortest repr
+    # that round-trips and the JSON parser reads it back to the same
+    # double as that CAST, so the arithmetic (and the oracle hash) is
+    # unchanged.
+    cents = F.expr(
+        f"from_json('{json.dumps([v for _, v in crows])}',"
+        " 'array<array<double>>')")
+    norms = F.expr(
+        f"from_json('{json.dumps([cnorm(v) for _, v in crows])}',"
+        " 'array<double>')")
+    e_dbl_sql = "transform(embedding, x -> CAST(x AS DOUBLE))"
+
+    def dot_sql(a: str, b: str) -> str:
+        return (f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
+                f"CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)")
+
     # The per-cell score array is materialized ONCE as a `_sc` column
     # (referencing the materialized `_e` double-cast and `_vn` norm), then
     # every consumer — argmax assign, probe-list structs — reads the
-    # column. The previous form textually embedded the whole scores array
-    # per consumer, and HOF aggregates are CodegenFallback (no CSE), so
-    # each candidate row evaluated 2×NCELLS score aggregates and each
-    # query row NCELLS² (r9; same mechanism as operators/similarity.py
-    # ivf_probe_topk). Also shrinks the parsed SQL ~10×.
+    # column: HOF aggregates are CodegenFallback (no CSE), so a textually
+    # repeated scores array costs each candidate row 2×NCELLS score
+    # aggregates and each query row NCELLS² (same mechanism as
+    # operators/similarity.py ivf_probe_topk).
     def scores_col_sql(ecol: str) -> str:
-        terms = [
-            f"ROUND({dot_sql(ecol, vec_sql(cv))} / (_vn * {dlit(cnorm(cv))}), 6)"
-            for _, cv in crows
-        ]
-        return "array(" + ", ".join(terms) + ")"
+        return (f"transform(_cents, (cv, j) -> "
+                f"ROUND({dot_sql(ecol, 'cv')} / (_vn * _norms[j]), 6))")
 
     # coalesce(…, -1): non-nullable join key, so the equi-join does not
     # infer isnotnull(cell) and push the whole argmax into a scan-side
@@ -607,10 +610,9 @@ def similarity_ivf_pq_search(spark, sf_dir):
     # join drops anyway.
     assigned_sql = ("coalesce(CAST(array_position(_sc, array_max(_sc))"
                     " - 1 AS INT), -1)")
-    probe_sql = ("slice(array_sort(array(" + ", ".join(
-        f"named_struct('ns', -_sc[{i}], 'c', {int(c)})"
-        for i, (c, _) in enumerate(crows)) +
-        f")), 1, {IVFPQ_NPROBE}).c")
+    # a cell is its centroid's index, in the probe lists as in `cell`
+    probe_sql = ("slice(array_sort(transform(_sc, (s, i) -> "
+                 f"named_struct('ns', -s, 'c', i))), 1, {IVFPQ_NPROBE}).c")
 
     # Spread the single-split scan first: cell assignment evaluates
     # NCELLS cosine scores per corpus row and would otherwise run in ONE
@@ -618,39 +620,39 @@ def similarity_ivf_pq_search(spark, sf_dir):
     # moves raw embeddings once, before any derived column exists.
     cand = (
         spread(emb, "vec_id")
-        .withColumn("_cb", F.expr(cb_sql))
+        .withColumns({"_cents": cents, "_norms": norms})
         .withColumn("_e", F.expr(e_dbl_sql))
         .withColumn("_vn", F.expr(f"SQRT({dot_sql('_e', '_e')})"))
         .withColumn("_sc", F.expr(scores_col_sql("_e")))
         .withColumn("cell", F.expr(assigned_sql))
     )
 
-    def sub_dist_sql(m: int, code: int) -> str:
-        return (f"aggregate(sequence(0, {SUB_DIM - 1}), "
-                f"CAST(0.0 AS DOUBLE), (acc, i) -> acc + POW("
-                f"element_at(_e, {m} * {SUB_DIM} + i + 1) - "
-                f"element_at(element_at(_cb, {code + 1}), "
-                f"{m} * {SUB_DIM} + i + 1), 2))")
-
-    picks_sql = "array(" + ", ".join(
-        "array_min(array(" + ", ".join(
-            f"named_struct('d', {sub_dist_sql(m, c)}, 'c', {c})"
-            for c in range(PQ_K)) + "))"
-        for m in range(M_SUB)) + ")"
-    cand = cand.withColumn(
-        "codes", F.expr(f"transform({picks_sql}, s -> s.c)")
-    ).select("vec_id", "cell", "codes", "_cb")
+    # per subspace m, the nearest of the first PQ_K centroids (the
+    # codebook): L2² over dims [m*SUB_DIM, (m+1)*SUB_DIM) in fixed index
+    # order; array_min over (d, c) structs breaks distance ties by code
+    sub_dist_sql = (f"aggregate(sequence(0, {SUB_DIM - 1}), "
+                    f"CAST(0.0 AS DOUBLE), (acc, i) -> acc + POW("
+                    f"element_at(_e, m * {SUB_DIM} + i + 1) - "
+                    f"element_at(element_at(_cents, c + 1), "
+                    f"m * {SUB_DIM} + i + 1), 2))")
+    codes_sql = (f"transform(sequence(0, {M_SUB - 1}), m -> array_min("
+                 f"transform(sequence(0, {PQ_K - 1}), c -> named_struct("
+                 f"'d', {sub_dist_sql}, 'c', c))).c)")
+    cand = cand.withColumn("codes", F.expr(codes_sql)).select(
+        "vec_id", "cell", "codes")
 
     q = (
         emb.filter(F.col("vec_id") < IVFPQ_NQ)
         .select(F.col("vec_id").alias("qid"), F.expr(e_dbl_sql).alias("_q"))
+        .withColumns({"_cents": cents, "_norms": norms})
         .withColumn("_vn", F.expr(f"SQRT({dot_sql('_q', '_q')})"))
         .withColumn("_sc", F.expr(scores_col_sql("_q")))
         .select("qid", "_q", F.explode(F.expr(probe_sql)).alias("cell"))
     )
 
-    joined = cand.join(F.broadcast(q), "cell").filter(
-        F.col("vec_id") != F.col("qid"))
+    joined = (cand.join(F.broadcast(q), "cell")
+              .filter(F.col("vec_id") != F.col("qid"))
+              .withColumn("_cents", cents))
     # ADC: per subspace, L2² from the query subvector to the candidate's
     # chosen codebook entry — summed in fixed m order
     adc_sql = (f"aggregate(sequence(0, {M_SUB - 1}), "
@@ -658,16 +660,18 @@ def similarity_ivf_pq_search(spark, sf_dir):
                f"aggregate(sequence(0, {SUB_DIM - 1}), "
                f"CAST(0.0 AS DOUBLE), (a2, i) -> a2 + POW("
                f"element_at(_q, m * {SUB_DIM} + i + 1) - "
-               f"element_at(element_at(_cb, element_at(codes, m + 1) + 1), "
+               f"element_at(element_at(_cents, element_at(codes, m + 1) + 1), "
                f"m * {SUB_DIM} + i + 1), 2)))")
     scored = joined.select(
         "qid", "vec_id", "cell",
         F.expr(f"ROUND({adc_sql}, 6)").alias("adc_dist"))
     w = Window.partitionBy("qid").orderBy("adc_dist", "vec_id")
+    # at most IVFPQ_K rows per query: a top-k, no sorted exchange
     return (
         scored.select("*", F.row_number().over(w).cast("int").alias("rank"))
         .filter(F.col("rank") <= IVFPQ_K)
         .orderBy("qid", "rank")
+        .limit(IVFPQ_NQ * IVFPQ_K)
     )
 
 
@@ -754,7 +758,7 @@ def pipeline_decontaminate(spark, sf_dir):
         .withColumn("_hit", F.lit(1))
     )
     n_tok = F.size(F.col("_toks")).cast("long")
-    return (
+    return sorted_result(
         corpus.select("doc_id", "source", n_tok.alias("n_tok"))
         .join(flagged, "doc_id", "left")
         .groupBy("source")
@@ -766,8 +770,8 @@ def pipeline_decontaminate(spark, sf_dir):
             .cast("long").alias("n_kept"),
             F.sum(F.when(F.col("_hit").isNull(), F.col("n_tok")).otherwise(0))
             .cast("long").alias("kept_tokens"),
-        )
-        .orderBy("source")
+        ),
+        "source",
     )
 
 

@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ._util import ravg, revenue, rsum, t
+from ._util import ravg, revenue, rsum, sorted_result, t
 from .registry import query
 
 
@@ -54,7 +54,7 @@ def q1(spark, sf_dir):
     li = t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") <= F.lit("2000-12-01"))
     disc_price = revenue()
     charge = disc_price * (F.lit(1) + F.col("l_tax"))
-    return (
+    return sorted_result(
         li.groupBy("l_returnflag", "l_linestatus")
         .agg(
             rsum("l_quantity").alias("sum_qty"),
@@ -65,8 +65,8 @@ def q1(spark, sf_dir):
             ravg("l_extendedprice").alias("avg_price"),
             ravg("l_discount").alias("avg_disc"),
             F.count("*").alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
+        ),
+        "l_returnflag", "l_linestatus",
     )
 
 
@@ -162,7 +162,7 @@ def q5(spark, sf_dir):
     supp = t(spark, sf_dir, "supplier")
     nation = t(spark, sf_dir, "nation")
     region = t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    return (
+    return sorted_result(
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(supp, li.l_suppkey == supp.s_suppkey)
         .join(cust,
@@ -171,8 +171,8 @@ def q5(spark, sf_dir):
         .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
         .groupBy("n_name")
-        .agg(F.round(F.sum(revenue()), 2).alias("revenue"))
-        .orderBy(F.desc("revenue"), "n_name")
+        .agg(F.round(F.sum(revenue()), 2).alias("revenue")),
+        F.desc("revenue"), "n_name",
     )
 
 

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ._util import revenue, t
+from ._util import revenue, sorted_result, t
 from .registry import query
 
 
@@ -99,7 +99,7 @@ def q9(spark, sf_dir):
     supp = t(spark, sf_dir, "supplier")
     nation = t(spark, sf_dir, "nation")
     amount = revenue() - F.lit(0.6) * F.col("p_retailprice") * F.col("l_quantity")
-    return (
+    return sorted_result(
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(part, li.l_partkey == part.p_partkey)
         .join(supp, li.l_suppkey == supp.s_suppkey)
@@ -108,8 +108,8 @@ def q9(spark, sf_dir):
                 F.year("o_orderdate").alias("o_year"),
                 amount.alias("amount"))
         .groupBy("nation", "o_year")
-        .agg(F.round(F.sum("amount"), 2).alias("sum_profit"))
-        .orderBy("nation", F.desc("o_year"))
+        .agg(F.round(F.sum("amount"), 2).alias("sum_profit")),
+        "nation", F.desc("o_year"),
     )
 
 

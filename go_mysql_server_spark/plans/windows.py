@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ._util import t
+from ._util import sorted_result, t
 from .registry import query
 
 
@@ -35,12 +35,12 @@ def window_row_number(spark, sf_dir):
     """row_number (reference window_functions.go RowNumber:1148) — the
     scalable top-N-per-group idiom: one shuffle on the partition key."""
     w = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), "o_orderkey")
-    return (
+    return sorted_result(
         t(spark, sf_dir, "orders")
         .select("o_custkey", "o_orderkey", "o_totalprice",
                 F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= 3)
-        .orderBy("o_custkey", "rn")
+        .filter(F.col("rn") <= 3),
+        "o_custkey", "rn",
     )
 
 

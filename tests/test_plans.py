@@ -241,8 +241,13 @@ def test_sequence_packing_partitioned_window_no_global_sort(spark):
     through one task at 100 TB)."""
     plan = formatted_plan(spark, "pipeline_sequence_packing")
     assert "Window" in plan
-    # Spark signals the scale-killer with an empty partition spec
-    assert "SinglePartition" not in plan
+    # Spark signals the scale-killer with an empty partition spec: a
+    # SinglePartition exchange planned to meet the window's requirement.
+    # The one single-partition exchange allowed is sorted_result's
+    # REPARTITION_BY_NUM above the final per-(source, lang) aggregate.
+    singles = [ln for ln in plan.splitlines() if "SinglePartition" in ln]
+    assert all("REPARTITION_BY_NUM" in ln for ln in singles), singles
+    assert "hashpartitioning(source" in plan
     assert "Join" not in plan
 
 
@@ -418,3 +423,102 @@ def test_fulltext_indexed_match_reads_index_not_corpus(spark):
     for i, ln in enumerate(lines):
         if "Scan ExistingRDD" in ln and "text" in ln:
             assert i == 0 or "Generate" not in lines[i - 1], lines[i - 1:i + 1]
+
+
+def test_sorted_result_matches_order_by(spark):
+    """sorted_result returns orderBy's rows in orderBy's order — NULL keys
+    first on ASC and last on DESC, ties on one key broken by the next —
+    through a single-partition exchange, with no range exchange (whose
+    RangePartitioner runs a sampling job of its own)."""
+    from pyspark.sql import functions as F
+
+    from go_mysql_server_spark.plans._util import sorted_result
+
+    pairs = [(None, 3), (2, None), (1, 5), (2, 1), (None, 1), (1, 5),
+             (3, 2), (2, 1), (1, None), (3, 9), (None, None), (2, 7)]
+    df = spark.createDataFrame(
+        [(k, v, i) for i, (k, v) in enumerate(pairs)],
+        "k int, v int, id int").repartition(3)
+    keys = (F.col("k"), F.desc("v"), "id")
+    want = df.orderBy(*keys)
+    got = sorted_result(df, *keys)
+    assert got.collect() == want.collect()
+
+    def executed(d):
+        return d._jdf.queryExecution().executedPlan().toString()
+
+    assert "rangepartitioning" in executed(want)
+    assert "rangepartitioning" not in executed(got)
+    assert "SinglePartition, REPARTITION_BY_NUM" in executed(got)
+
+
+# Headline builders whose result is sorted by plans/_util.py::sorted_result
+# (their optimized plan root was a global Sort over a range exchange).
+SORTED_RESULT_BUILDERS = (
+    "tpch_q1_pricing_summary", "tpch_q5_local_supplier_volume",
+    "agg_count_distinct", "window_row_number_topn_per_group",
+    "events_sessionization", "dedup_minhash_lsh", "dedup_simhash",
+    "text_features", "multimodal_decode", "tpch_q9_product_type_profit",
+    "pipeline_domain_mix", "pipeline_cluster_keep_best",
+    "pipeline_quality_rules", "pipeline_sequence_packing",
+    "pipeline_char_lm_score", "pipeline_decontaminate",
+)
+
+
+@pytest.mark.parametrize("name", SORTED_RESULT_BUILDERS)
+def test_sorted_result_builders_plan_no_range_exchange(spark, name):
+    """The final sort is a single-partition exchange plus a local sort:
+    no range exchange, so no sampling job re-runs the upstream stages."""
+    plan = QUERIES[name](spark, SF_DIR)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert "rangepartitioning" not in plan
+    assert "SinglePartition, REPARTITION_BY_NUM" in plan
+
+
+# Spark jobs per query of the benchmark's `analytics` workload at sf0.001,
+# builder call and collect counted together. Counts may only go down.
+ANALYTICS_JOBS = {
+    "tpch_q1_pricing_summary": 3,
+    "tpch_q3_shipping_priority": 4,
+    "dedup_simhash": 3,
+    "vocab_document_frequency": 3,
+    "similarity_ivf_pq_search": 5,
+}
+
+
+@pytest.mark.parametrize("name", sorted(ANALYTICS_JOBS))
+def test_analytics_job_count_pins(spark, name):
+    from tests.harness import count_jobs
+
+    build_jobs, df = count_jobs(spark, lambda: QUERIES[name](spark, SF_DIR))
+    collect_jobs, _ = count_jobs(spark, df.collect)
+    assert build_jobs + collect_jobs <= ANALYTICS_JOBS[name], (
+        build_jobs, collect_jobs)
+    if name == "similarity_ivf_pq_search":
+        # the centroid fetch is one plain collect
+        assert build_jobs <= 1
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "rangepartitioning" not in plan
+
+
+def test_json_array_literal_reads_back_python_doubles(spark):
+    """IVF-PQ passes its centroids as one from_json literal of
+    json.dumps text: the shortest repr that round-trips, parsed back to
+    the very double Python holds (the value the per-double
+    CAST('<repr>' AS DOUBLE) literals it replaced produced)."""
+    import json
+    import struct
+
+    from pyspark.sql import functions as F
+
+    from go_mysql_server_spark.plans._util import t
+
+    emb = t(spark, SF_DIR, "embeddings")
+    vals = [float(x) for r in emb.orderBy("vec_id").limit(8).collect()
+            for x in r["embedding"]]
+    vals += [0.1, 1 / 3, -0.0, 5e-324, 2.2250738585072014e-308,
+             1.7976931348623157e308, 123456789.12345679, -1e-7]
+    got = spark.range(1).select(F.expr(
+        f"from_json('{json.dumps(vals)}', 'array<double>')")).first()[0]
+    assert [struct.pack("<d", x) for x in got] == \
+        [struct.pack("<d", x) for x in vals]
